@@ -103,6 +103,11 @@ TABLE_FORMATS = ("simple", "csv", "tsv", "plain", "github", "pretty", "grid", "r
 
 
 def format_table(df: DataFrame, limit: int = 10000, fmt: str = "simple") -> str:
+    """Render the first ``limit`` rows of ``df`` (see :func:`_format_rows`)."""
+    return _format_rows(df.columns, df.limit(limit).collect(), fmt)
+
+
+def _format_rows(headers: list[str], rows: list, fmt: str = "simple") -> str:
     """Table render (reference compact_table + tabulate,
     slurm2sql.py:1135-1151, 1174): NULL as empty string, numbers
     right-aligned. ``simple`` is the reference's compact default;
@@ -123,14 +128,11 @@ def format_table(df: DataFrame, limit: int = 10000, fmt: str = "simple") -> str:
                 f"optional tabulate package: {', '.join(TABLE_FORMATS)} "
                 "(install tabulate for every tabulate style)"
             ) from None
-        rows = df.limit(limit).collect()
         return _tabulate(
             [["" if v is None else v for v in r] for r in rows],
-            headers=df.columns,
+            headers=headers,
             tablefmt=fmt,
         )
-    rows = df.limit(limit).collect()
-    headers = df.columns
     if fmt in ("csv", "tsv"):
         import csv as _csv
         import io
@@ -442,11 +444,13 @@ def seff_cli(spark: SparkSession, argv) -> str:
         q = SEFF_PER_JOB_SQL.format(
             long_output=long_output, where=where, order_by=order_by
         )
+    # one job: the emptiness check and the render share the collected rows
     df = spark.sql(q)
-    if df.isEmpty():
+    rows = df.limit(args.limit).collect()
+    if not rows:
         print("No data fetched with these sacct options.")
         raise SystemExit(2)
-    return format_table(df, args.limit, args.format)
+    return _format_rows(df.columns, rows, args.format)
 
 
 def _live_sacct_df(spark: SparkSession, options: dict):

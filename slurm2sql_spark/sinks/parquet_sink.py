@@ -23,9 +23,11 @@ columnar, distributed store.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -101,6 +103,11 @@ def upsert(
     Without partitioning the whole table is rewritten (fine for tests,
     not for 100 TB — always partition in production).
 
+    ``new_rows`` is evaluated once, so a live or nondeterministic source
+    (a sacct DataSource, a ``now``-dependent transform) is upserted as
+    one snapshot: the partitions cleared and the rows written come from
+    the same evaluation. The snapshot is released before returning.
+
     ``format="delta"`` switches to a real ``MERGE INTO`` through the
     Delta commit protocol (requires the optional ``delta-spark``
     package) — the production answer on object stores, where the
@@ -121,59 +128,22 @@ def upsert(
     batch = new_rows.withColumn(BATCH_COL, F.lit(batch_seq))
 
     if partition_cols:
-        # Prune the rewrite: only partitions containing an affected key
-        # change. The row data never leaves the executors; only the
-        # *partition value tuples* (O(days touched), a handful of rows)
-        # are collected to drive the directory swap below.
-        affected_parts = (
-            old.join(batch.select(key).distinct(), key, "left_semi")
-            .select(*partition_cols)
-            .distinct()
-            .unionByName(batch.select(*partition_cols).distinct())
-            .distinct()
-        )
-        affected = [
-            tuple(getattr(r, c) for c in partition_cols)
-            for r in affected_parts.collect()
-        ]
-        old_in_parts = old.join(
-            F.broadcast(affected_parts), list(partition_cols), "left_semi"
-        )
-        merged = _newest_per_key(old_in_parts.unionByName(batch), key)
-        # Write to staging, then swap directories for EVERY affected
-        # partition — including ones the merged output no longer has any
-        # rows for. Dynamic partition overwrite alone rewrites only
-        # partitions present in the output, so when all rows of an old
-        # partition migrate elsewhere (e.g. a running job's day
-        # re-derived from Time on the next batch), the stale partition
-        # would survive with duplicate-key rows.
-        staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-        rels = [
-            os.path.join(*(_hive_part_dir(c, v) for c, v in zip(partition_cols, vals)))
-            for vals in affected
-        ]
-        # Commit point: the manifest is written only after the staged data
-        # is complete, and the install loop below is a pure idempotent
-        # replay of it — a crash anywhere mid-swap is repaired by
-        # recover_staging() (called on the next upsert), which re-runs the
-        # same loop from the staged output. Without the manifest a crashed
-        # swap left a mix of old and new partitions with no way back.
-        #
-        # The manifest records two EXPLICIT lists, classified while the
-        # staging dir is still complete: "installs" (rels with staged
-        # data to rename in) and "deletes" (affected rels with no
-        # surviving rows — the key-migration case). Inferring the delete
-        # case from "src absent" at replay time is wrong: after a crash
-        # mid-loop an already-installed rel ALSO has src absent (it was
-        # renamed away), and the inference would rmtree the freshly
-        # installed data.
-        installs = [r for r in rels if os.path.isdir(os.path.join(staging, r))]
-        deletes = [r for r in rels if r not in installs]
-        _write_manifest(staging, {"installs": installs, "deletes": deletes})
-        _install_staged(path, staging)
+        # The partitioned merge runs several jobs over the batch; each
+        # reads one snapshot of it, so the affected list and the written
+        # rows come from the same evaluation even when ``new_rows`` is
+        # live (a sacct DataSource re-runs sacct on every scan) or
+        # nondeterministic (current_timestamp near midnight), and the
+        # batch's lineage runs once instead of once per job.
+        snapshot = batch.localCheckpoint()
+        try:
+            _merge_partitions(path, old, snapshot, key, partition_cols)
+        finally:
+            # localCheckpoint pins the snapshot's blocks with no handle
+            # on the DataFrame; release them through the plan's RDD.
+            snapshot._jdf.queryExecution().analyzed().rdd().unpersist(False)
         return
 
+    # One job reads the batch once, so no snapshot is needed here.
     merged = _newest_per_key(old.unionByName(batch), key)
     # Read-modify-write of the same path needs a staging swap: Spark
     # cannot overwrite a path it is still reading lazily from. Same
@@ -183,6 +153,81 @@ def upsert(
     merged.write.mode("overwrite").parquet(staging)
     _write_manifest(staging, {"whole_table": True})
     _install_whole(path, staging)
+
+
+def _merge_partitions(
+    path: str,
+    old: DataFrame,
+    batch: DataFrame,
+    key: str,
+    partition_cols: tuple[str, ...],
+) -> None:
+    # Prune the rewrite: only partitions containing an affected key
+    # change. The row data never leaves the executors; only the
+    # *partition value tuples* (O(days touched), a handful of rows)
+    # are collected to drive the old-side scan and the directory swap.
+    affected = [
+        tuple(r)
+        for r in old.join(F.broadcast(batch.select(key).distinct()), key, "left_semi")
+        .select(*partition_cols)
+        .unionByName(batch.select(*partition_cols))
+        .distinct()
+        .collect()
+    ]
+    # A literal predicate on partition columns is pruned at file
+    # listing, so the merge reads only the affected directories.
+    old_in_parts = old.filter(_partition_predicate(partition_cols, affected))
+    merged = _newest_per_key(old_in_parts.unionByName(batch), key)
+    # Write to staging, then swap directories for EVERY affected
+    # partition — including ones the merged output no longer has any
+    # rows for. Dynamic partition overwrite alone rewrites only
+    # partitions present in the output, so when all rows of an old
+    # partition migrate elsewhere (e.g. a running job's day
+    # re-derived from Time on the next batch), the stale partition
+    # would survive with duplicate-key rows.
+    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
+    merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
+    rels = [
+        os.path.join(*(_hive_part_dir(c, v) for c, v in zip(partition_cols, vals)))
+        for vals in affected
+    ]
+    # Commit point: the manifest is written only after the staged data
+    # is complete, and the install loop below is a pure idempotent
+    # replay of it — a crash anywhere mid-swap is repaired by
+    # recover_staging() (called on the next upsert), which re-runs the
+    # same loop from the staged output. Without the manifest a crashed
+    # swap left a mix of old and new partitions with no way back.
+    #
+    # The manifest records two EXPLICIT lists, classified while the
+    # staging dir is still complete: "installs" (rels with staged
+    # data to rename in) and "deletes" (affected rels with no
+    # surviving rows — the key-migration case). Inferring the delete
+    # case from "src absent" at replay time is wrong: after a crash
+    # mid-loop an already-installed rel ALSO has src absent (it was
+    # renamed away), and the inference would rmtree the freshly
+    # installed data.
+    installs = [r for r in rels if os.path.isdir(os.path.join(staging, r))]
+    deletes = [r for r in rels if r not in installs]
+    _write_manifest(staging, {"installs": installs, "deletes": deletes})
+    _install_staged(path, staging)
+
+
+def _partition_predicate(partition_cols: tuple[str, ...], affected: list[tuple]):
+    """Literal filter selecting exactly the ``affected`` partition value
+    tuples; a NULL value is the ``__HIVE_DEFAULT_PARTITION__`` dir."""
+    if len(partition_cols) == 1:
+        c = F.col(partition_cols[0])
+        vals = [v for (v,) in affected if v is not None]
+        return c.isin(vals) | c.isNull() if len(vals) < len(affected) else c.isin(vals)
+
+    def eq(c: str, v):
+        return F.col(c).isNull() if v is None else F.col(c) == F.lit(v)
+
+    return reduce(
+        operator.or_,
+        (reduce(operator.and_, map(eq, partition_cols, vals)) for vals in affected),
+        F.lit(False),
+    )
 
 
 def _delta_upsert(

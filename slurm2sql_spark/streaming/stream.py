@@ -553,7 +553,14 @@ def export_stream(
         )
         out_dir = f"{path}/batch={int(batch_id)}"
         cap = int(os.environ.get("SPARK_GRAFT_EXPORT_LOCAL_CAP", "1000000"))
-        rows = kept.limit(cap + 1).collect() if cap > 0 else None
+        f_id, f_src = kept.schema.fields[0], kept.schema.fields[1]
+        # the local write maps id/src to these Arrow types; any other
+        # dtype takes the distributed path, which is dtype-agnostic
+        arrow_of = {"long": "int64", "integer": "int32", "string": "string"}
+        id_t = arrow_of.get(f_id.dataType.typeName())
+        src_t = arrow_of.get(f_src.dataType.typeName())
+        local = cap > 0 and id_t is not None and src_t is not None
+        rows = kept.limit(cap + 1).collect() if local else None
         if rows is not None and len(rows) <= cap:
             import pyarrow as pa
 
@@ -564,7 +571,6 @@ def export_stream(
                 n_groups=n_groups,
                 salt=salt,
             )
-            f_id, f_src = kept.schema.fields[0], kept.schema.fields[1]
             schema = T.StructType(
                 [
                     T.StructField("id", f_id.dataType, True),
@@ -584,19 +590,10 @@ def export_stream(
             cols = (
                 list(zip(*assigned)) if assigned else [[]] * 6
             )
-            pa_of = {
-                "long": pa.int64(),
-                "integer": pa.int32(),
-                "string": pa.string(),
-            }
             tbl = pa.table(
                 {
-                    "id": pa.array(
-                        cols[0], pa_of[f_id.dataType.typeName()]
-                    ),
-                    "src": pa.array(
-                        cols[1], pa_of[f_src.dataType.typeName()]
-                    ),
+                    "id": pa.array(cols[0], id_t),
+                    "src": pa.array(cols[1], src_t),
                     "n_tokens": pa.array(cols[2], pa.int64()),
                     "offset": pa.array(cols[3], pa.int64()),
                     "bin": pa.array(cols[4], pa.int64()),

@@ -45,6 +45,57 @@ def _read(spark, fake_sacct, **opts):
     return r.load()
 
 
+def _calls(fake_sacct) -> int:
+    """Runs of the fake binary since the last call (the log is reset)."""
+    log = fake_sacct.parent / "calls.log"
+    n = len(log.read_text().splitlines()) if log.exists() else 0
+    log.unlink(missing_ok=True)
+    return n
+
+
+def _live_history(spark, fake_sacct, tmp_path):
+    """A table seeded from the fake sacct, and the live batch that
+    re-runs the binary on every evaluation."""
+    from slurm2sql_spark.operators.transform import slurm_transform
+    from slurm2sql_spark.sinks.parquet_sink import with_day_partition, write_overwrite
+
+    live = with_day_partition(slurm_transform(_read(spark, fake_sacct), now=1700000000))
+    table = str(tmp_path / "t")
+    write_overwrite(live, table, partition_cols=("day",))
+    _calls(fake_sacct)
+    return live, table
+
+
+def test_partitioned_merge_runs_live_sacct_once(spark, fake_sacct, tmp_path):
+    """upsert evaluates its batch once: one partitioned merge of a live
+    sacct batch runs sacct once, not once per Spark job of the merge."""
+    from slurm2sql_spark.sinks.parquet_sink import read_table, upsert
+
+    live, table = _live_history(spark, fake_sacct, tmp_path)
+    upsert(spark, live, table, partition_cols=("day",))
+    assert _calls(fake_sacct) == 1
+    assert sorted(r.JobID for r in read_table(spark, table).collect()) == [
+        "1", "1.batch", "2",
+    ]
+
+
+def test_upsert_releases_its_batch_snapshot(spark, fake_sacct, tmp_path):
+    """The snapshot an upsert materializes is released before it
+    returns: repeated upserts leave no cached RDD behind."""
+    from slurm2sql_spark.sinks.parquet_sink import upsert
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached():
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    live, table = _live_history(spark, fake_sacct, tmp_path)
+    before = cached()
+    for _ in range(5):
+        upsert(spark, live, table, partition_cols=("day",))
+    assert cached() - before == set()
+
+
 def test_reads_fake_sacct(spark, fake_sacct):
     rows = _read(spark, fake_sacct).collect()
     assert len(rows) == 3

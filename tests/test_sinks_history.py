@@ -168,6 +168,52 @@ def test_partitioned_upsert_clears_migrated_partition(spark, tmp_path):
     assert not os.path.isdir(os.path.join(p, "day=1970-01-01"))
 
 
+def test_partitioned_upsert_of_unstable_batch_keeps_every_key(spark, tmp_path):
+    """A batch whose partition value changes between evaluations (here
+    the clock; in production a live sacct source or a 'now' near
+    midnight) is upserted as one snapshot: the partitions cleared for
+    key 1 and the partition its new row is written to come from the same
+    evaluation, so neither key is lost."""
+    p = str(tmp_path / "t")
+    schema = "JobID string, State string, part string"
+    seed = spark.createDataFrame([("1", "RUNNING", "a"), ("2", "PENDING", "a")], schema)
+    upsert(spark, seed, p, partition_cols=("part",))
+    batch = spark.createDataFrame([("1", "COMPLETED")], "JobID string, State string")
+    batch = batch.withColumn("part", F.date_format(F.current_timestamp(), "HHmmssSSS"))
+    upsert(spark, batch, p, partition_cols=("part",))
+    out = {r.JobID: r.State for r in read_table(spark, p).collect()}
+    assert out == {"1": "COMPLETED", "2": "PENDING"}
+
+
+def test_partitioned_upsert_prunes_multi_column_and_null_partitions(spark, tmp_path):
+    """The old-side scan is limited by a literal predicate over every
+    partition column; NULL values (the __HIVE_DEFAULT_PARTITION__ dir)
+    must be selected too, or their old rows would be dropped."""
+    p = str(tmp_path / "t")
+    schema = "JobID string, State string, a string, b string"
+    rows = [
+        ("1", "RUNNING", "x", None),
+        ("2", "PENDING", None, "y"),
+        ("3", "DONE", "x", "y"),
+        ("4", "DONE", "z", "y"),
+    ]
+    upsert(spark, spark.createDataFrame(rows, schema), p, partition_cols=("a", "b"))
+    batch = [
+        ("1", "COMPLETED", "x", None),
+        ("2", "RUNNING", None, "y"),
+        ("5", "NEW", "x", "y"),
+    ]
+    upsert(spark, spark.createDataFrame(batch, schema), p, partition_cols=("a", "b"))
+    out = {r.JobID: (r.State, r.a, r.b) for r in read_table(spark, p).collect()}
+    assert out == {
+        "1": ("COMPLETED", "x", None),
+        "2": ("RUNNING", None, "y"),
+        "3": ("DONE", "x", "y"),
+        "4": ("DONE", "z", "y"),
+        "5": ("NEW", "x", "y"),
+    }
+
+
 def test_analyze_table_computes_catalog_stats(spark, tmp_path):
     from slurm2sql_spark.sinks.parquet_sink import analyze_table, write_overwrite
 

@@ -241,49 +241,50 @@ def test_job_state_transitions_ttl_eviction(spark, tmp_path):
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     old_nodata = spark.conf.get(nodata_key, "true")
     spark.conf.set(nodata_key, "false")
+    try:
+        def run_once():
+            stream = read_sacct_stream(spark, str(drops), fields=FIELDS)
+            q = (
+                job_state_transitions(stream, state_ttl_ms=1)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            terminated = q.awaitTermination(120)
+            assert terminated, "availableNow TTL replay failed to terminate"
 
-    def run_once():
-        stream = read_sacct_stream(spark, str(drops), fields=FIELDS)
-        q = (
-            job_state_transitions(stream, state_ttl_ms=1)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        _write_csv(
+            drops / "t1.csv",
+            [("300", "300", "RUNNING", "2021-01-01T10:00:00", "4", "cpu")],
         )
-        terminated = q.awaitTermination(120)
-        assert terminated, "availableNow TTL replay failed to terminate"
+        run_once()
+        time.sleep(0.2)  # let the 1 ms TTL lapse
+        # an unrelated batch advances processing time -> 300's timeout fires
+        _write_csv(
+            drops / "t2.csv",
+            [("301", "301", "PENDING", "2021-01-01T11:00:00", "1", "cpu")],
+        )
+        run_once()
+        _write_csv(
+            drops / "t3.csv",
+            [("300", "300", "COMPLETED", "2021-01-01T12:00:00", "4", "cpu")],
+        )
+        run_once()
 
-    _write_csv(
-        drops / "t1.csv",
-        [("300", "300", "RUNNING", "2021-01-01T10:00:00", "4", "cpu")],
-    )
-    run_once()
-    time.sleep(0.2)  # let the 1 ms TTL lapse
-    # an unrelated batch advances processing time -> 300's timeout fires
-    _write_csv(
-        drops / "t2.csv",
-        [("301", "301", "PENDING", "2021-01-01T11:00:00", "1", "cpu")],
-    )
-    run_once()
-    _write_csv(
-        drops / "t3.csv",
-        [("300", "300", "COMPLETED", "2021-01-01T12:00:00", "4", "cpu")],
-    )
-    run_once()
-
-    rows = sorted(
-        (r.JobID, r.prev_state, r.new_state)
-        for r in spark.read.parquet(out).collect()
-    )
-    spark.conf.set(nodata_key, old_nodata)
-    assert rows == [
-        ("300", None, "COMPLETED"),  # state evicted -> first sight again
-        ("300", None, "RUNNING"),
-        ("301", None, "PENDING"),
-    ]
+        rows = sorted(
+            (r.JobID, r.prev_state, r.new_state)
+            for r in spark.read.parquet(out).collect()
+        )
+        assert rows == [
+            ("300", None, "COMPLETED"),  # state evicted -> first sight again
+            ("300", None, "RUNNING"),
+            ("301", None, "PENDING"),
+        ]
+    finally:
+        spark.conf.set(nodata_key, old_nodata)
 
 
 def test_decontaminate_stream_flags_as_docs_land(spark, tmp_path):
@@ -473,6 +474,17 @@ def test_export_stream_exactly_once_and_balanced(spark, tmp_path):
     exactly once across batch=*/shard=* dirs, per-batch shard loads
     respect the balance bound, and a retried batch id overwrites its
     own directory instead of appending."""
+    _export_stream_round_trip(spark, tmp_path, "int")
+
+
+def test_export_stream_unmapped_id_dtype_falls_back(spark, tmp_path):
+    """An id dtype the driver-local write has no Arrow mapping for
+    (double) takes the distributed pack/shard path instead of raising
+    KeyError inside foreachBatch."""
+    _export_stream_round_trip(spark, tmp_path, "double")
+
+
+def _export_stream_round_trip(spark, tmp_path, id_type):
     import os
 
     from pyspark.sql import functions as F
@@ -486,7 +498,9 @@ def test_export_stream_exactly_once_and_balanced(spark, tmp_path):
     )
     rows = [(i, text if i % 4 else "short", "s" + str(i % 2))
             for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id int, text string, source string")
+    df = spark.createDataFrame(
+        rows, "doc_id int, text string, source string"
+    ).withColumn("doc_id", F.col("doc_id").cast(id_type))
     src = tmp_path / "src"
     src.mkdir()
     import glob as _glob
