@@ -2023,14 +2023,9 @@ def drop_caches() -> None:
             pass  # session may be gone
     _RESULT_CACHE.clear()
     _PY_CACHE.clear()
-    from slurm2sql_spark.operators import dedup, textstats
+    from slurm2sql_spark.operators.textstats import release_caches
 
-    dedup.release_caches()
-    textstats.release_caches()
-
-
-# Backwards-compatible alias used by the flagship seam below.
-_EFF_CACHE = _RESULT_CACHE
+    release_caches()
 
 
 def _eff_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7565,29 +7560,6 @@ def dedup_winnow(spark, sf_dir):
     )
 
 
-@register(
-    "dedup_winnow_fast",
-    None,  # the numpy multilinear gram hash isn't reproducible in ANSI
-    # SQL; dedup_winnow above is the hash-checked md5 twin, and
-    # test_textstats.py pins that both kernels recover the identical
-    # planted near-dup pairs on a fixture.
-    doc="Production winnow path (L31/L32 fast variant, "
-    "operators/textstats.py:winnow_fingerprints_fast): identical "
-    "winnowing + inverted-index pair machinery to dedup_winnow but the "
-    "per-gram hash is a numpy-vectorized multilinear hash (three array "
-    "ops per doc) instead of per-position Python md5. Rows-only by "
-    "design — this entry exists so the bench measures the production "
-    "kernel, not the oracle-portable one.",
-)
-def dedup_winnow_fast(spark, sf_dir):
-    from slurm2sql_spark.operators.dedup import winnow_overlap_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return winnow_overlap_pairs(
-        docs, "doc_id", "text", k=8, w=4, threshold=0.35, kernel="fast"
-    )
-
-
 #: shared by `dedup_exact_substring` and `scrub_exact_substrings`
 #: (VERDICT r8 #8 discipline — one source of truth for the span
 #: semantics): positional winnowing (k=24, w=8, leftmost-argmin),
@@ -7674,31 +7646,6 @@ def dedup_exact_substring(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     out = exact_substring_spans(
         docs, "doc_id", "text", k=24, w=8, min_len=100, min_docs=2, gap=32
-    )
-    return out.withColumn("span_share", _q6(F.col("span_share")))
-
-
-@register(
-    "dedup_exact_substring_fast",
-    None,  # the numpy multilinear gram hash isn't reproducible in ANSI
-    # SQL; dedup_exact_substring above is the hash-checked md5 twin,
-    # and test_dedup.py pins that both kernels recover the planted
-    # cross-boundary spans (winnowing's match guarantee is hash-
-    # independent; only span EDGES may differ by < w+k chars).
-    doc="Production path for L52 (operators/textstats.py:"
-    "winnow_fingerprint_positions_fast): identical span machinery to "
-    "dedup_exact_substring but per-gram hashing is a numpy-vectorized "
-    "multilinear hash + windowed argmin (three array ops per doc) "
-    "instead of per-position Python md5. Rows-only by design — this "
-    "entry exists so the bench measures the production kernel.",
-)
-def dedup_exact_substring_fast(spark, sf_dir):
-    from slurm2sql_spark.operators.dedup import exact_substring_spans
-
-    docs = _t(spark, sf_dir, "documents")
-    out = exact_substring_spans(
-        docs, "doc_id", "text",
-        k=24, w=8, min_len=100, min_docs=2, gap=32, kernel="fast",
     )
     return out.withColumn("span_share", _q6(F.col("span_share")))
 
@@ -8546,8 +8493,8 @@ def url_domain_psl_q(spark, sf_dir):
 # reads, so builder, driver and judge always agree:
 #   1. ``_GATE_PINNED`` — hand-maintained, small: entries that must
 #      gate THIS round regardless of staleness (new/churned code or
-#      oracle SQL, plus the rows-only fast twins whose only gate is
-#      the driver's rows-only check — r12 lesson).
+#      oracle SQL, plus the rows-only dedup_simhash_fast, whose only
+#      gate is the driver's rows-only check — r12 lesson).
 #   2. Staleness fill — every other entry sorted stalest-first by its
 #      last driver-gated round (never-gated sorts first), computed
 #      from the committed CORRECTNESS_r*.json history; ties break by
@@ -8568,13 +8515,11 @@ _GATE_WINDOW = 50
 # of staleness. Keep this SHORT — every pinned slot is one fewer
 # staleness-fill slot. Two stanzas:
 _GATE_PINNED = [
-    # rows-only fast twins stay in-window EVERY round (r12 lesson):
+    # the rows-only entry stays in-window EVERY round (r12 lesson):
     # the tail's coverage contract is the oracle-parity pytest, which
     # cannot express a no-oracle entry — the driver's rows-only check
-    # plus the pair-equality pytest are their gate.
+    # plus the pair-equality pytest are its gate.
     "dedup_simhash_fast",
-    "dedup_winnow_fast",
-    "dedup_exact_substring_fast",
     # r15 churn re-gates: the heavy-hitters protocol grew the
     # D >= T exactness guard (ADVICE r14 #1), and the softmax oracle
     # family's tokenizer class was canonicalized to [ \t\n\r\f]

@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from slurm2sql_spark.functions.converters import cached_columns
+# the operators' one persist registry lives in textstats
+from slurm2sql_spark.operators.textstats import _persist, release_caches
 from slurm2sql_spark.plans import fan_out
 
 logger = logging.getLogger(__name__)
@@ -73,45 +75,6 @@ __all__ = [
     "scrub_paragraphs",
     "scrub_paragraphs_inline",
 ]
-
-#: frames persisted by operators in this module (see
-#: ngram_jaccard_pairs); released by release_caches(). Grows until the
-#: caller releases — a long-lived library session calling the persisting
-#: operators in a loop without release_caches() pins executor/storage
-#: memory without bound, so _persist() warns past _PERSISTED_WARN
-#: entries. Appends/pops are not synchronized; call release_caches()
-#: from the thread that ran the jobs, not concurrently with them.
-_PERSISTED: list[DataFrame] = []
-_PERSISTED_WARN = 32
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    if len(_PERSISTED) == _PERSISTED_WARN:
-        import warnings
-
-        warnings.warn(
-            f"{_PERSISTED_WARN} frames pinned by dedup operators without "
-            "a release_caches() call — storage memory grows unboundedly "
-            "in long-lived sessions; call "
-            "slurm2sql_spark.operators.dedup.release_caches() between "
-            "batches",
-            ResourceWarning,
-            stacklevel=3,
-        )
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every frame an operator in this module persisted."""
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session may be gone
-            pass
-
 
 #: RE2-parity whitespace: DuckDB/RE2 ``\s`` is exactly [\t\n\f\r ],
 #: while Java's \s adds \x0b and Python's str.split() all of Unicode
@@ -576,7 +539,7 @@ def minhash_incremental_pairs(
 
     With ``include_batch_pairs`` the batch index is persisted; call
     ``release_caches()`` between batches in a long-lived session or
-    pinned frames accumulate (see ``_PERSISTED``).
+    pinned frames accumulate (see ``textstats._PERSISTED``).
     """
     bb = minhash_band_rows(batch, id_col, text_col, n, num_hashes, bands)
     if include_batch_pairs:
@@ -892,7 +855,6 @@ def winnow_overlap_pairs(
     threshold: float = 0.5,
     max_fingerprint_freq: int | None = 64,
     persist_postings: bool = True,
-    kernel: str = "md5",
 ) -> DataFrame:
     """Near-duplicate pairs by winnowing-fingerprint Jaccard (id_a <
     id_b) — the corpus-level consumer of
@@ -913,33 +875,22 @@ def winnow_overlap_pairs(
     computed over post-cap postings on both engine and oracle — the
     recall trade is the same one ``ngram_jaccard_pairs`` documents.
 
-    ``kernel`` selects the fingerprint hash: ``"md5"`` (oracle-portable,
-    DuckDB recomputes it exactly) or ``"fast"`` (numpy-vectorized
-    multilinear hash, ``textstats.winnow_fingerprints_fast`` — the
-    production path; rows-only at the gate, pair-equality pinned in
-    pytest).
+    Fingerprints are the md5 gram hashes of
+    ``textstats.winnow_fingerprints``, which the DuckDB oracle
+    recomputes exactly.
     """
-    from slurm2sql_spark.operators.textstats import (
-        winnow_fingerprints,
-        winnow_fingerprints_fast,
-    )
-
-    if kernel not in ("md5", "fast"):
-        raise ValueError(f"kernel must be 'md5' or 'fast', got {kernel!r}")
-    fp_fn = winnow_fingerprints if kernel == "md5" else winnow_fingerprints_fast
+    from slurm2sql_spark.operators.textstats import winnow_fingerprints
 
     # fan the narrow (id, text) projection out first — same seam as
     # shingles(): the winnow kernel dominates, and a single-row-group
-    # scan would run it nearly serial. The md5 kernel hashes EVERY gram
-    # through a per-call md5 (~0.5 us/gram, ~10 s/MB single-thread —
-    # r15 profile), so unlike the cheap shingle/fast kernels there is
-    # no corpus small enough for the fan-out shuffle to cost more than
-    # the serial kernel: never skip the spread for it.
+    # scan would run it nearly serial. The kernel md5-hashes every
+    # distinct gram (~0.5 us/gram, ~10 s/MB single-thread — r15
+    # profile), so unlike the cheap shingle kernel there is no corpus
+    # small enough for the fan-out shuffle to cost more than the serial
+    # kernel: never skip the spread for it.
     narrow = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    narrow = fan_out(
-        narrow, min_bytes=None if kernel == "md5" else 4 << 20
-    )
-    fped = fp_fn(narrow, "_t", out_col="_wfp", k=k, w=w)
+    narrow = fan_out(narrow)
+    fped = winnow_fingerprints(narrow, "_t", out_col="_wfp", k=k, w=w)
     # no distinct: the kernel emits a sorted SET per doc, so
     # (id, fingerprint) is already unique — a distinct here would be a
     # redundant full shuffle of the posting list
@@ -958,15 +909,12 @@ def _repeated_span_frame(
     min_len: int,
     min_docs: int,
     gap: int,
-    kernel: str = "md5",
 ) -> DataFrame:
     """Shared span detector for ``exact_substring_spans`` (rollup) and
     ``scrub_exact_substrings`` (removal): one row per qualifying span —
     ``(id, _a, _b, span_len)`` where [_a, _b] are 1-based inclusive
     char bounds in the whitespace-collapsed lowercased text. See
     ``exact_substring_spans`` for the method and scale notes.
-    ``kernel``: ``"md5"`` (oracle-portable) or ``"fast"`` (numpy
-    multilinear — the production path, rows-only at the gate).
 
     The effective session gap is clamped to ``max(gap, k-1)``: each
     span's end extends ``k-1`` chars past its last selected gram
@@ -979,26 +927,16 @@ def _repeated_span_frame(
     end, so emitted spans are strictly disjoint."""
     from slurm2sql_spark.operators.textstats import (
         winnow_fingerprint_positions,
-        winnow_fingerprint_positions_fast,
     )
 
     from pyspark.sql import Window
 
-    if kernel not in ("md5", "fast"):
-        raise ValueError(f"kernel must be 'md5' or 'fast', got {kernel!r}")
-    fp_fn = (
-        winnow_fingerprint_positions
-        if kernel == "md5"
-        else winnow_fingerprint_positions_fast
-    )
     gap = max(int(gap), int(k) - 1)  # disjoint-span invariant, see above
     # md5 kernel: ~0.5 us/gram serial — always spread (see
-    # winnow_overlap_pairs); fast kernel keeps the tiny-corpus skip
+    # winnow_overlap_pairs)
     narrow = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    narrow = fan_out(
-        narrow, min_bytes=None if kernel == "md5" else 4 << 20
-    )
-    fped = fp_fn(narrow, "_t", out_col="_pf", k=k, w=w)
+    narrow = fan_out(narrow)
+    fped = winnow_fingerprint_positions(narrow, "_t", out_col="_pf", k=k, w=w)
     sel = _persist(
         fped.select("id", F.explode("_pf").alias("_s")).select(
             "id", F.col("_s.pos").alias("pos"), F.col("_s.fp").alias("fp")
@@ -1043,7 +981,6 @@ def exact_substring_spans(
     min_len: int = 50,
     min_docs: int = 2,
     gap: int | None = None,
-    kernel: str = "md5",
 ) -> DataFrame:
     """Cross-boundary exact-substring duplication report — the
     ExactSubstr half of Lee et al. 2022 (the half ``repeated_
@@ -1087,7 +1024,7 @@ def exact_substring_spans(
     if gap is None:
         gap = w + k
     spans = _repeated_span_frame(
-        df, id_col, text_col, k, w, min_len, min_docs, gap, kernel
+        df, id_col, text_col, k, w, min_len, min_docs, gap
     )
     per_doc = spans.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -1127,7 +1064,6 @@ def scrub_exact_substrings(
     min_len: int = 50,
     min_docs: int = 2,
     gap: int | None = None,
-    kernel: str = "md5",
 ) -> DataFrame:
     """REMOVE every cross-doc repeated span found by
     ``exact_substring_spans`` — the scrub half of ExactSubstr (Lee et
@@ -1152,7 +1088,7 @@ def scrub_exact_substrings(
     if gap is None:
         gap = w + k
     spans = _repeated_span_frame(
-        df, id_col, text_col, k, w, min_len, min_docs, gap, kernel
+        df, id_col, text_col, k, w, min_len, min_docs, gap
     )
     per_doc = spans.groupBy("id").agg(
         F.sort_array(

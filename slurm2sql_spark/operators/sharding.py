@@ -68,10 +68,13 @@ def pack_assign_local(
     distributions):
 
     - pack: per ``src``, docs ordered by ``id`` ascending NULLS FIRST
-      (the window default); ``offset`` sums prior non-NULL ``n_words``
-      (Spark ``sum`` skips NULLs), ``bin = offset // budget``
-      (non-negative, so floor == truncation), NULL ``n_words`` stays a
-      NULL ``n_tokens``.
+      (the window default); ``offset`` sums prior non-NULL raw
+      ``n_words`` in that order and casts the running sum to long
+      (Spark's ``sum(...).cast("long")``: fractional sizes are summed
+      before truncation, not truncated one by one; Spark ``sum`` skips
+      NULLs), ``bin = offset // budget`` (non-negative, so floor ==
+      truncation), ``n_tokens`` is the per-row cast, and NULL
+      ``n_words`` stays a NULL ``n_tokens``.
     - group: ``int(md5((str(id) + salt).encode()).hexdigest()[:8], 16)
       % n_groups`` == ``hash_bucket`` (conv/substr/md5) for the string
       cast of any id type the gate uses; NULL id -> NULL grp, its own
@@ -97,12 +100,13 @@ def pack_assign_local(
         docs.sort(
             key=lambda d: (d[0] is not None, "" if d[0] is None else d[0])
         )
-        off = 0
+        total = 0
         for id_, nw in docs:
             nt = None if nw is None else int(nw)
+            off = int(total)
             packed.append((id_, src, nt, off, off // int(budget)))
-            if nt is not None:
-                off += nt
+            if nw is not None:
+                total += nw
     by_grp: dict = {}
     for row in packed:
         id_ = row[0]

@@ -1,8 +1,10 @@
 """Text analysis operators: token stats, quality scoring, language ID,
 document fingerprinting. Built-in-function expressions (JVM-side) with
-one deliberate exception — ``winnow_fingerprints`` is an Arrow-batched
-pandas kernel (see its docstring for the measured expression-form
-blowup) — and everything runs in the scan stage with zero shuffles.
+one deliberate exception — winnowing (``winnow_fingerprints`` and its
+positional variant) runs one md5 gram-hash kernel in Arrow-batched
+pandas UDFs (see ``winnow_fingerprints`` for the measured
+expression-form blowup) — and everything runs in the scan stage with
+zero shuffles.
 """
 
 from __future__ import annotations
@@ -21,9 +23,7 @@ __all__ = [
     "lang_id",
     "fingerprint",
     "winnow_fingerprints",
-    "winnow_fingerprints_fast",
     "winnow_fingerprint_positions",
-    "winnow_fingerprint_positions_fast",
     "doc_frequency_topk",
     "tfidf_top_terms",
     "text_profile",
@@ -64,11 +64,15 @@ STOPWORDS = {
     "fr": ["le", "la", "les", "et", "de", "un", "est", "que"],
 }
 
-#: frames persisted by operators in this module (tfidf_top_terms' tf);
-#: released by release_caches() — same contract as dedup._PERSISTED:
-#: grows until the caller releases, so a long-lived library session
-#: calling tfidf_top_terms in a loop without release_caches() pins
-#: storage memory without bound; _persist() warns past _PERSISTED_WARN.
+#: frames persisted by the operator modules (tfidf_top_terms here;
+#: dedup, sampling, bpe and classifier reach the same registry through
+#: ``dedup._persist``); released by release_caches(). Grows until the
+#: caller releases — a long-lived library session calling the
+#: persisting operators in a loop without release_caches() pins
+#: executor/storage memory without bound, so _persist() warns past
+#: _PERSISTED_WARN entries. Appends/pops are not synchronized; call
+#: release_caches() from the thread that ran the jobs, not concurrently
+#: with them.
 _PERSISTED: list[DataFrame] = []
 _PERSISTED_WARN = 32
 
@@ -80,11 +84,11 @@ def _persist(df: DataFrame) -> DataFrame:
         import warnings
 
         warnings.warn(
-            f"{_PERSISTED_WARN} frames pinned by textstats operators "
-            "without a release_caches() call — storage memory grows "
-            "unboundedly in long-lived sessions; call "
-            "slurm2sql_spark.operators.textstats.release_caches() "
-            "between batches",
+            f"{_PERSISTED_WARN} frames pinned by operators without a "
+            "release_caches() call — storage memory grows unboundedly "
+            "in long-lived sessions; call "
+            "slurm2sql_spark.operators.dedup.release_caches() (the same "
+            "function as textstats.release_caches) between batches",
             ResourceWarning,
             stacklevel=3,
         )
@@ -92,7 +96,7 @@ def _persist(df: DataFrame) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Unpersist every frame an operator in this module persisted."""
+    """Unpersist every frame an operator persisted through ``_persist``."""
     while _PERSISTED:
         df = _PERSISTED.pop()
         try:
@@ -105,7 +109,7 @@ def release_caches() -> None:
 #: [\t\n\f\r ], Java's \s adds \x0b — every tokenizer that faces a
 #: DuckDB oracle uses the explicit class so texts containing \x0b
 #: cannot tokenize differently across engines (same class the winnow
-#: kernels and dedup._re2_tokens pin).
+#: kernel and dedup._re2_tokens pin).
 WS_RE2 = r"[ \t\n\r\f]+"
 
 
@@ -184,17 +188,26 @@ def fingerprint(text: Column) -> Column:
 
 
 def _md5_ctor():
-    """The md5 constructor for the winnow kernels: CPython's built-in
+    """The md5 constructor for the winnow kernel: CPython's built-in
     ``_md5`` module when available — its constructor is ~3x cheaper
     than ``hashlib``'s OpenSSL-backed one (measured 82 vs 248 ns for a
-    24-byte gram; the kernels call it once per gram, so constructor
-    overhead IS the hash cost) — falling back to ``hashlib.md5``.
-    Identical digests by definition."""
+    24-byte gram; the kernel calls it once per hashed gram, so
+    constructor overhead IS the hash cost) — falling back to
+    ``hashlib.md5``. Identical digests by definition."""
     try:
         from _md5 import md5
     except ImportError:  # pragma: no cover - non-CPython fallback
         from hashlib import md5
     return md5
+
+
+#: Most grams one ``np.unique`` round of ``_gram_hashes_batch`` holds.
+#: A round's transient arrays (gram matrix, sort copy, unique keys,
+#: inverse index) cost ~32 B per gram, ~64 MB at this cap, whatever the
+#: Arrow batch size; only the 8 B/gram output hashes outlive a round.
+#: Above the 1.26M grams of the whole 3000-doc benchmark corpus, so a
+#: batch of that size still deduplicates in one round.
+_GRAMS_PER_ROUND = 1 << 21
 
 
 def _gram_hashes_batch(texts, k: int, ws) -> list:
@@ -207,15 +220,16 @@ def _gram_hashes_batch(texts, k: int, ws) -> list:
     The md5-per-gram value CONTRACT is untouched — every gram still
     hashes as ``int(md5(gram_bytes).hexdigest()[:8], 16)``, the
     engine-portable idiom the DuckDB oracle recomputes — only the CALL
-    COUNT drops: all k=8 ASCII docs' grams concatenate into one
-    (N, 8) uint8 matrix, ``np.unique`` over its uint64 view finds the
-    distinct grams (bit-exact: the view is pure reinterpretation, no
-    S8 trailing-NUL collapsing), md5 runs once per DISTINCT gram, and
-    the inverse index scatters hashes back into per-doc arrays.
-    Measured on the sf0.1 documents corpus: 18% of grams are distinct
-    within a 156-doc kernel batch (the local fan-out grain), kernel
-    wall 1.09 -> 0.63 s (tools/bench_winnow_kernel.py, bit-identical
-    output asserted).
+    COUNT drops: the k=8 ASCII docs' grams are cut into rounds of at
+    most ``_GRAMS_PER_ROUND`` grams (a long doc may span rounds); each
+    round concatenates into one (N, 8) uint8 matrix, ``np.unique`` over
+    its uint64 view finds the distinct grams (bit-exact: the view is
+    pure reinterpretation, no S8 trailing-NUL collapsing), md5 runs
+    once per DISTINCT gram, and the inverse index scatters hashes back
+    into per-doc arrays. Measured on the sf0.1 documents corpus: 18% of
+    grams are distinct within a 156-doc kernel batch (the local fan-out
+    grain), kernel wall 1.09 -> 0.63 s (tools/bench_winnow_kernel.py,
+    bit-identical output asserted).
 
     Returns a list aligned with ``texts``: None for NULL text, an
     empty array for shorter-than-one-gram docs, else the int64 hash
@@ -229,7 +243,7 @@ def _gram_hashes_batch(texts, k: int, ws) -> list:
     _fb = int.from_bytes
     empty = np.empty(0, np.int64)
     out = [None] * len(texts)
-    bufs, idxs, counts = [], [], []
+    views = []  # (j, (ng, 8) gram view) per k=8 ASCII doc
     for j, text in enumerate(texts):
         if text is None:
             continue
@@ -239,9 +253,9 @@ def _gram_hashes_batch(texts, k: int, ws) -> list:
             out[j] = empty
             continue
         if k == 8 and t.isascii():
-            bufs.append(np.frombuffer(t.encode(), np.uint8))
-            idxs.append(j)
-            counts.append(ng)
+            views.append(
+                (j, sliding_window_view(np.frombuffer(t.encode(), np.uint8), 8))
+            )
         elif t.isascii():
             tb = t.encode()
             out[j] = np.asarray(
@@ -256,12 +270,10 @@ def _gram_hashes_batch(texts, k: int, ws) -> list:
                 ],
                 np.int64,
             )
-    if bufs:
-        grams = np.concatenate(
-            [sliding_window_view(b, 8) for b in bufs], axis=0
-        )
-        keys = grams.view(np.uint64).ravel()
-        uniq, inv = np.unique(keys, return_inverse=True)
+
+    def hash_round(pieces) -> None:
+        grams = np.concatenate([g for _, g in pieces], axis=0)
+        uniq, inv = np.unique(grams.view(np.uint64).ravel(), return_inverse=True)
         # tobytes, not S8 tolist: S-dtype strips trailing NUL bytes,
         # which would truncate grams containing \x00 before hashing
         mv = memoryview(uniq.tobytes())
@@ -275,9 +287,26 @@ def _gram_hashes_batch(texts, k: int, ws) -> list:
         )
         all_h = uh[inv]
         off = 0
-        for j, ng in zip(idxs, counts):
-            out[j] = all_h[off : off + ng]
-            off += ng
+        for parts, g in pieces:
+            parts.append(all_h[off : off + len(g)])
+            off += len(g)
+
+    pieces, room = [], _GRAMS_PER_ROUND
+    per_doc = []
+    for j, g in views:
+        parts = []
+        per_doc.append((j, parts))
+        while len(g):
+            take, g = g[:room], g[room:]
+            pieces.append((parts, take))
+            room -= len(take)
+            if room == 0:
+                hash_round(pieces)
+                pieces, room = [], _GRAMS_PER_ROUND
+    if pieces:
+        hash_round(pieces)
+    for j, parts in per_doc:
+        out[j] = parts[0] if len(parts) == 1 else np.concatenate(parts)
     return out
 
 
@@ -298,7 +327,9 @@ def winnow_fingerprints(
 
     Adds ``out_col`` (sorted distinct fingerprint set, array<bigint>).
     Engine-portable hashing (md5 hex-prefix over the UTF-8 k-gram, the
-    ``hash_bucket`` idiom — the DuckDB oracle recomputes it exactly).
+    ``hash_bucket`` idiom — the DuckDB oracle recomputes it exactly);
+    this gram hash (``_gram_hashes_batch``) is the one winnowing kernel,
+    shared with :func:`winnow_fingerprint_positions`.
     Shorter-than-one-window docs degrade to a single global-min
     fingerprint; docs shorter than one gram to an empty array; NULL
     text stays NULL.
@@ -355,91 +386,6 @@ def winnow_fingerprints(
     )
 
 
-#: Fixed multilinear-hash coefficients for the fast winnow kernel: one
-#: odd 64-bit multiplier per gram byte position, drawn once from a
-#: seeded PCG64 so every batch on every executor hashes identically.
-#: (Carter-Wegman multilinear over uint64 is pairwise-independent —
-#: collision odds ~2^-64 per gram pair, ample for min-selection.)
-_WINNOW_FAST_SEED = 0x51A9_57AC  # arbitrary fixed constant
-
-
-def winnow_fingerprints_fast(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "fingerprints",
-    k: int = 8,
-    w: int = 4,
-) -> DataFrame:
-    """Production fast path for ``winnow_fingerprints``: identical
-    winnowing scheme (k-gram hashes, per-w-window minima, sorted
-    distinct set) but the per-gram hash is a numpy-vectorized
-    multilinear hash over the UTF-8 bytes instead of a per-position
-    Python ``hashlib.md5`` call — the whole document hashes in three
-    array ops (sliding-window view, weighted sum, windowed min), no
-    interpreter-level loop over positions.
-
-    Fingerprint VALUES differ from the md5 kernel (different hash →
-    different window minima get selected), so this variant is
-    rows-only at the oracle gate; ``tests/test_textstats.py`` pins
-    that both kernels recover the identical planted near-dup PAIRS
-    through ``dedup.winnow_overlap_pairs`` (the winnowing guarantee —
-    any match of length >= w+k-1 shares a fingerprint — holds for any
-    gram hash). Same NULL/short-doc degradation contract as the md5
-    kernel. Grams are CHAR k-grams: the kernel hashes the UTF-32
-    codepoint array (ADVICE r10: the former UTF-8 byte-gram form made
-    gram COUNT — and, in the positional twin, gram POSITIONS — a
-    byte-space quantity that consumers interpret in char space; on a
-    non-ASCII doc that skewed every offset). For pure-ASCII text the
-    codepoint array equals the byte array value-for-value, so hash
-    values and selected windows are unchanged there.
-    """
-    import re as _re
-
-    @F.pandas_udf("array<bigint>")
-    def _kernel(texts: pd.Series) -> pd.Series:
-        import numpy as np
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        ws = _re.compile(r"[ \t\n\r\f]+")
-        rng = np.random.default_rng(_WINNOW_FAST_SEED)
-        weights = rng.integers(0, 2**63, size=k, dtype=np.uint64) * 2 + 1
-
-        def one(text):
-            if text is None:
-                return None
-            b = np.frombuffer(
-                ws.sub(" ", text.lower()).encode("utf-32-le"),
-                # explicit little-endian dtype: the encoding is LE by
-                # name, so a native-endian uint32 would byte-swap the
-                # codepoints on a big-endian executor and silently
-                # diverge the fingerprints across mixed clusters
-                dtype="<u4",
-            )
-            ng = len(b) - k + 1
-            if ng < 1:
-                return []
-            grams = sliding_window_view(b, k).astype(np.uint64)
-            h = (grams * weights).sum(axis=1)  # uint64 wraparound hash
-            if ng < w:
-                mins = h.min(keepdims=True)
-            else:
-                mins = sliding_window_view(h, w).min(axis=1)
-            # view BEFORE unique: the sorted-distinct contract is in
-            # int64 order (bigint), not uint64 order
-            return np.unique(mins.view(np.int64)).tolist()
-
-        return texts.map(one)
-
-    # asNondeterministic: the kernel IS deterministic; the mark stops
-    # the optimizer cloning it below inferred Generate/Filter nodes and
-    # the fan-out exchange, which ran the whole hash pass twice — once
-    # nearly serial (guide §4.4; r15 plan audit: 2x ArrowEvalPython in
-    # every downstream-explode consumer plan).
-    return df.withColumn(
-        out_col, _kernel.asNondeterministic()(F.col(text_col))
-    )
-
-
 def winnow_fingerprint_positions(
     df: DataFrame,
     text_col: str,
@@ -451,7 +397,7 @@ def winnow_fingerprint_positions(
     ``w`` consecutive k-gram hashes, select the LEFTMOST minimal gram
     and keep its (position, hash) — the winnowing guarantee (any match
     of length >= w+k-1 shares a selected hash) holds exactly as for the
-    value-set kernel, but positions let a consumer locate and merge the
+    value-set variant, but positions let a consumer locate and merge the
     matching SPANS (the ExactSubstr half of Lee et al. 2022, "Dedup-
     licating Training Data Makes Language Models Better" — public
     paper; ``dedup.exact_substring_spans`` is the consumer).
@@ -499,92 +445,6 @@ def winnow_fingerprint_positions(
             )
             out.append([(int(i) + 1, int(arr[i])) for i in picked])
         return pd.Series(out, index=texts.index)
-
-    # asNondeterministic: the kernel IS deterministic; the mark stops
-    # the optimizer cloning it below inferred Generate/Filter nodes and
-    # the fan-out exchange, which ran the whole hash pass twice — once
-    # nearly serial (guide §4.4; r15 plan audit: 2x ArrowEvalPython in
-    # every downstream-explode consumer plan).
-    return df.withColumn(
-        out_col, _kernel.asNondeterministic()(F.col(text_col))
-    )
-
-
-def winnow_fingerprint_positions_fast(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "fingerprints",
-    k: int = 8,
-    w: int = 4,
-) -> DataFrame:
-    """Production fast path for :func:`winnow_fingerprint_positions`:
-    identical positional winnowing scheme (leftmost-argmin per
-    w-window, distinct selected positions) but the per-gram hash is
-    the numpy-vectorized multilinear hash of
-    :func:`winnow_fingerprints_fast` — the whole document hashes and
-    window-argmins in a handful of array ops, no interpreter loop.
-
-    ``numpy.argmin`` returns the FIRST index of the minimum, so the
-    leftmost tie-break matches the md5 kernel exactly; selected
-    POSITIONS differ between kernels only because the hash values
-    differ (different minima win). The winnowing guarantee — any
-    cross-doc match >= w+k-1 chars shares selected hashes at the same
-    relative offsets — holds for any gram hash, so span DETECTION is
-    kernel-independent up to edge effects; pytest pins that planted
-    spans are recovered by both kernels. Grams are CHAR k-grams over
-    the UTF-32 codepoint array, so ``pos`` is a true 1-based CHAR
-    offset in the collapsed string — the coordinate space every
-    consumer (``dedup._repeated_span_frame``'s span merge,
-    ``exact_substring_spans``'s ``doc_chars``,
-    ``scrub_exact_substrings``'s substring stitching) indexes in.
-    (ADVICE r10 medium: the former UTF-8 byte-gram form emitted BYTE
-    offsets here, so on any non-ASCII document kernel="fast" produced
-    misplaced spans, possible span_share > 1, and wrong scrub
-    excisions. ASCII text is unaffected by the change: codepoints
-    equal bytes value-for-value, so hashes and positions coincide.)
-    """
-    import re as _re
-
-    @F.pandas_udf("array<struct<pos:int,fp:bigint>>")
-    def _kernel(texts: pd.Series) -> pd.Series:
-        import numpy as np
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        ws = _re.compile(r"[ \t\n\r\f]+")
-        rng = np.random.default_rng(_WINNOW_FAST_SEED)
-        weights = rng.integers(0, 2**63, size=k, dtype=np.uint64) * 2 + 1
-
-        def one(text):
-            if text is None:
-                return None
-            b = np.frombuffer(
-                ws.sub(" ", text.lower()).encode("utf-32-le"),
-                # explicit little-endian dtype: the encoding is LE by
-                # name, so a native-endian uint32 would byte-swap the
-                # codepoints on a big-endian executor and silently
-                # diverge the fingerprints across mixed clusters
-                dtype="<u4",
-            )
-            ng = len(b) - k + 1
-            if ng < 1:
-                return []
-            grams = sliding_window_view(b, k).astype(np.uint64)
-            h = (grams * weights).sum(axis=1)
-            # argmin in UNSIGNED order — the same order the value twin
-            # (winnow_fingerprints_fast) takes its window minima in —
-            # then report values through the int64 view (bigint
-            # contract)
-            hi = h.view(np.int64)
-            if ng < w:
-                i = int(np.argmin(h))
-                return [(i + 1, int(hi[i]))]
-            picked = np.unique(
-                sliding_window_view(h, w).argmin(axis=1)
-                + np.arange(ng - w + 1)
-            )
-            return [(int(i) + 1, int(hi[i])) for i in picked]
-
-        return texts.map(one)
 
     # asNondeterministic: the kernel IS deterministic; the mark stops
     # the optimizer cloning it below inferred Generate/Filter nodes and

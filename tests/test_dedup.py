@@ -819,10 +819,9 @@ def test_scrub_exact_substrings_removes_spans_everywhere(spark):
 
 
 def test_exact_substring_fast_kernel_recovers_planted_spans(spark):
-    """The winnowing guarantee is hash-independent: the numpy
-    multilinear positional kernel must recover the same planted
-    cross-boundary spans as the md5 kernel (same carriers, same span
-    count; bounds may differ by < w+k edge chars)."""
+    """The md5 positional winnowing kernel recovers the planted
+    cross-boundary span as exactly one span per carrier, covering the
+    whole shared region up to w+k edge chars; the clean doc has none."""
     from slurm2sql_spark.operators.dedup import exact_substring_spans
 
     shared = (
@@ -842,32 +841,26 @@ def test_exact_substring_fast_kernel_recovers_planted_spans(spark):
         ],
         "doc_id int, text string",
     )
-    results = {}
-    for kernel in ("md5", "fast"):
-        results[kernel] = {
-            r["doc_id"]: r
-            for r in exact_substring_spans(
-                docs, "doc_id", "text",
-                k=8, w=4, min_len=50, min_docs=2, kernel=kernel,
-            ).collect()
-        }
-    assert set(results["fast"]) == set(results["md5"]) == {1, 2}
+    rows = {
+        r["doc_id"]: r
+        for r in exact_substring_spans(
+            docs, "doc_id", "text", k=8, w=4, min_len=50, min_docs=2,
+        ).collect()
+    }
+    assert set(rows) == {1, 2}
     for d in (1, 2):
-        assert results["fast"][d]["n_spans"] == results["md5"][d]["n_spans"]
-        # same span up to edge effects: coverage within w+k chars
-        assert abs(
-            results["fast"][d]["span_chars"] - results["md5"][d]["span_chars"]
-        ) <= 12
+        assert rows[d]["n_spans"] == 1
+        # the span covers the shared region up to edge effects
+        assert abs(rows[d]["span_chars"] - len(shared)) <= 12
 
 
 def test_exact_substring_fast_kernel_char_positions_non_ascii(spark):
-    """ADVICE r10 (medium): the fast positional kernel used to emit
-    BYTE offsets into the UTF-8 encoding while every consumer indexes
-    CHAR offsets — on non-ASCII text spans were misplaced, span_share
-    could exceed 1.0, and the scrub excised the wrong ranges. The
-    kernel now works on the UTF-32 codepoint array, so on a corpus
-    where every char is 2-3 UTF-8 bytes the fast kernel must agree
-    with the (always char-space) md5 kernel and keep every invariant."""
+    """ADVICE r10 (medium): span positions are CHAR offsets into the
+    whitespace-collapsed text, which every consumer indexes. On a
+    corpus where every char is 2-3 UTF-8 bytes the report and the scrub
+    must keep their char-space invariants: span_share in (0, 1],
+    doc_chars counting chars, the shared region excised, and
+    len(text) == norm_len - removed_chars."""
     import re as _re
 
     from slurm2sql_spark.operators.dedup import (
@@ -888,42 +881,40 @@ def test_exact_substring_fast_kernel_char_positions_non_ascii(spark):
         ],
         "doc_id int, text string",
     )
-    spans = {}
-    for kernel in ("md5", "fast"):
-        spans[kernel] = {
-            r["doc_id"]: r
-            for r in exact_substring_spans(
-                docs, "doc_id", "text",
-                k=8, w=4, min_len=40, min_docs=2, kernel=kernel,
-            ).collect()
-        }
-    assert set(spans["fast"]) == set(spans["md5"]) == {1, 2}
-    for d in (1, 2):
-        f, m = spans["fast"][d], spans["md5"][d]
-        assert f["n_spans"] == m["n_spans"] == 1
-        assert abs(f["span_chars"] - m["span_chars"]) <= 12
-        # doc_chars counts CHARS on both kernels; the byte-offset bug
-        # made fast spans run past doc_chars on multibyte text
-        assert 0.0 < f["span_share"] <= 1.0
-        assert f["doc_chars"] == m["doc_chars"]
     raw = {r["doc_id"]: r["text"] for r in docs.collect()}
+    norm = {
+        d: _re.sub(r"[ \t\n\r\f]+", " ", t.lower())
+        for d, t in raw.items()
+        if t is not None
+    }
+    spans = {
+        r["doc_id"]: r
+        for r in exact_substring_spans(
+            docs, "doc_id", "text", k=8, w=4, min_len=40, min_docs=2,
+        ).collect()
+    }
+    assert set(spans) == {1, 2}
+    for d in (1, 2):
+        m = spans[d]
+        assert m["n_spans"] == 1
+        assert abs(m["span_chars"] - len(shared)) <= 12
+        # doc_chars counts CHARS, so a span can never run past it
+        assert m["doc_chars"] == len(norm[d])
+        assert 0.0 < m["span_share"] <= 1.0
     scrub = {
         r["doc_id"]: r
         for r in scrub_exact_substrings(
-            docs, "doc_id", "text",
-            k=8, w=4, min_len=40, min_docs=2, kernel="fast",
+            docs, "doc_id", "text", k=8, w=4, min_len=40, min_docs=2,
         ).collect()
     }
     for d in (1, 2):
         r = scrub[d]
         assert "重複" not in r["text"] and "çhàngé" not in r["text"]
-        norm_len = len(_re.sub(r"[ \t\n\r\f]+", " ", raw[d].lower()))
-        assert len(r["text"]) == norm_len - r["removed_chars"]
+        assert len(r["text"]) == len(norm[d]) - r["removed_chars"]
     assert scrub[4]["text"] is None
 
 
-@pytest.mark.parametrize("kernel", ["md5", "fast"])
-def test_repeated_span_gap_clamp_keeps_spans_disjoint(spark, kernel):
+def test_repeated_span_gap_clamp_keeps_spans_disjoint(spark):
     """ADVICE r10: a caller-supplied gap < k-1 could sessionize two
     spans whose extended ends overlap, so the scrub's gap stitching
     produced negative-length substrings (silently dropped text) and
@@ -954,7 +945,7 @@ def test_repeated_span_gap_clamp_keeps_spans_disjoint(spark, kernel):
         r["doc_id"]: r
         for r in scrub_exact_substrings(
             docs, "doc_id", "text",
-            k=8, w=4, min_len=20, min_docs=2, gap=0, kernel=kernel,
+            k=8, w=4, min_len=20, min_docs=2, gap=0,
         ).collect()
     }
     for d in (1, 2):
@@ -964,7 +955,7 @@ def test_repeated_span_gap_clamp_keeps_spans_disjoint(spark, kernel):
         assert r["removed_chars"] > 0
     report = exact_substring_spans(
         docs, "doc_id", "text",
-        k=8, w=4, min_len=20, min_docs=2, gap=0, kernel=kernel,
+        k=8, w=4, min_len=20, min_docs=2, gap=0,
     ).collect()
     for r in report:
         assert 0.0 < r["span_share"] <= 1.0

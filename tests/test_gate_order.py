@@ -25,6 +25,13 @@ def test_gate_reorder_is_a_permutation():
         assert callable(spec.spark)
 
 
+def test_rows_only_set_is_exactly_simhash_fast():
+    # Every entry but one is hash-checked against DuckDB. A new entry
+    # without an oracle must be added here on purpose.
+    rows_only = [n for n, s in catalog.QUERIES.items() if s.oracle is None]
+    assert rows_only == ["dedup_simhash_fast"]
+
+
 def test_tail_entries_are_only_stable_micros():
     # Anything rotated past the window must be an explicitly listed
     # long-stable micro — never a new or never-gated entry.

@@ -126,15 +126,18 @@ def test_shard_manifest_order_independent_and_additive(spark):
     )
 
 
-@pytest.mark.parametrize("id_kind", ["long", "string"])
+@pytest.mark.parametrize("id_kind", ["long", "string", "fractional"])
 def test_pack_assign_local_matches_distributed(spark, id_kind):
     """pack_assign_local (the r16 driver-local micro-batch path) must
     reproduce the distributed pack_sequences -> shard_assign chain
     bit-for-bit on planted distributions: many tied sizes (the
     serpentine sort's tie-break by id), several sources, a NULL
-    n_words row (NULL n_tokens, contributes nothing to offsets), and
-    both id types the gates use (long doc ids; string ids exercise the
-    UTF-8-vs-codepoint ordering argument, incl. non-ASCII)."""
+    n_words row (NULL n_tokens, contributes nothing to offsets), a
+    NULL-id row, and both id types the gates use (long doc ids; string
+    ids exercise the UTF-8-vs-codepoint ordering argument, incl.
+    non-ASCII). The fractional case uses double sizes: Spark sums the
+    raw values and casts the running sum, so offsets differ from a sum
+    of per-row truncated sizes."""
     import random
 
     from slurm2sql_spark.operators.packing import pack_sequences
@@ -146,21 +149,28 @@ def test_pack_assign_local_matches_distributed(spark, id_kind):
     rng = random.Random(42)
     n = 400
     rows = []
+    sizes = (
+        [0.4, 0.7, 10.5, 50.25, 50.25, 199.9]
+        if id_kind == "fractional"
+        else [10, 50, 50, 50, 200]
+    )
     for i in range(n):
-        if id_kind == "long":
-            id_ = i * 7 + 3
-        else:
+        if id_kind == "string":
             # non-ASCII tail on some ids: UTF-8 byte order == codepoint
             id_ = f"doc-{i:04d}" + ("é" if i % 9 == 0 else "")
+        else:
+            id_ = i * 7 + 3
+        if i == 11:
+            id_ = None
         src = f"s{i % 5}"
         # heavy ties: sizes drawn from a tiny set, plus one NULL
-        nw = None if i == 37 else rng.choice([10, 50, 50, 50, 200])
+        nw = None if i == 37 else rng.choice(sizes)
         rows.append((id_, src, nw))
-    schema = (
-        "doc_id long, source string, n_words long"
-        if id_kind == "long"
-        else "doc_id string, source string, n_words long"
-    )
+    schema = {
+        "long": "doc_id long, source string, n_words long",
+        "string": "doc_id string, source string, n_words long",
+        "fractional": "doc_id long, source string, n_words double",
+    }[id_kind]
     df = spark.createDataFrame(rows, schema)
 
     budget, n_shards, n_groups, salt = 128, 8, 4, "eq1"

@@ -294,10 +294,13 @@ def test_tune_lsh_warns_when_bands_cap_binds(caplog):
 def test_persisted_frames_warn_past_bound(spark, monkeypatch):
     import warnings
 
-    from slurm2sql_spark.operators import dedup
+    from slurm2sql_spark.operators import dedup, textstats
 
-    monkeypatch.setattr(dedup, "_PERSISTED", [])
-    monkeypatch.setattr(dedup, "_PERSISTED_WARN", 3)
+    # one registry: dedup re-exports textstats' persist/release pair
+    assert dedup._persist is textstats._persist
+    assert dedup.release_caches is textstats.release_caches
+    monkeypatch.setattr(textstats, "_PERSISTED", [])
+    monkeypatch.setattr(textstats, "_PERSISTED_WARN", 3)
     df = spark.range(1)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
@@ -305,7 +308,7 @@ def test_persisted_frames_warn_past_bound(spark, monkeypatch):
             dedup._persist(df)
     assert any(issubclass(x.category, ResourceWarning) for x in w)
     dedup.release_caches()
-    assert not dedup._PERSISTED
+    assert not textstats._PERSISTED
 
 
 def test_embedding_near_dup_default_is_auto_tuned(spark, monkeypatch):

@@ -168,19 +168,12 @@ def test_chunk_spans_windows(spark):
         chunk_spans(df, "doc_id", "text", window=0)
 
 
-@pytest.mark.parametrize("kernel", ["md5", "fast"])
-def test_winnow_fingerprints_guarantee_and_edges(spark, kernel):
+def test_winnow_fingerprints_guarantee_and_edges(spark):
     """Winnowing guarantee: two docs sharing a substring of length
     >= w+k-1 (here 11) share at least one fingerprint, wherever the
-    substring sits; plus the short-doc degradations. Both the
-    oracle-portable md5 kernel and the vectorized fast kernel must
-    honor the identical contract."""
-    from slurm2sql_spark.operators.textstats import (
-        winnow_fingerprints,
-        winnow_fingerprints_fast,
-    )
+    substring sits; plus the short-doc degradations."""
+    from slurm2sql_spark.operators.textstats import winnow_fingerprints
 
-    fn = winnow_fingerprints if kernel == "md5" else winnow_fingerprints_fast
     shared = "zqxjkvbwpmy"  # 11 chars = w+k-1 for k=8, w=4
     df = spark.createDataFrame(
         [
@@ -195,7 +188,7 @@ def test_winnow_fingerprints_guarantee_and_edges(spark, kernel):
     )
     out = {
         r["id"]: r["fps"]
-        for r in fn(df, "text", out_col="fps").collect()
+        for r in winnow_fingerprints(df, "text", out_col="fps").collect()
     }
     assert set(out[1]) & set(out[2]), "shared 11-char substring must collide"
     assert not set(out[1]) & set(out[3])
@@ -207,11 +200,9 @@ def test_winnow_fingerprints_guarantee_and_edges(spark, kernel):
 
 
 def test_winnow_kernels_pair_equality(spark):
-    """The fast multilinear kernel and the md5 kernel select different
-    gram positions as fingerprints (different hash -> different window
-    minima), but both must recover the identical PAIR set from a
-    planted-near-dup corpus through winnow_overlap_pairs — the
-    simhash_fast acceptance pattern."""
+    """winnow_overlap_pairs must recover exactly the planted near-dup
+    pairs (an appended edit, a one-word swap) and no pair between
+    unrelated docs."""
     from slurm2sql_spark.operators.dedup import winnow_overlap_pairs
 
     base = (
@@ -230,14 +221,10 @@ def test_winnow_kernels_pair_equality(spark):
         (5, "short unrelated filler text about cooking pasta at home"),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    pairs = {}
-    for kernel in ("md5", "fast"):
-        got = winnow_overlap_pairs(
-            df, "doc_id", "text", k=8, w=4, threshold=0.35, kernel=kernel
-        ).collect()
-        pairs[kernel] = {(r["id_a"], r["id_b"]) for r in got}
-    assert {(1, 2), (3, 4)} <= pairs["md5"]
-    assert pairs["md5"] == pairs["fast"]
+    got = winnow_overlap_pairs(
+        df, "doc_id", "text", k=8, w=4, threshold=0.35
+    ).collect()
+    assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2), (3, 4)}
 
 
 def test_winnow_md5_kernel_matches_duckdb_on_vertical_tab(spark):
@@ -623,3 +610,49 @@ def test_gram_hashes_batch_matches_per_gram_reference():
             else:
                 assert isinstance(g, np.ndarray) or len(w_) == 0
                 assert list(g) == w_
+
+
+def test_gram_hashes_batch_bounds_grams_per_round(monkeypatch):
+    """Each np.unique round of the batch gram hashing holds at most
+    _GRAMS_PER_ROUND grams, so memory per Arrow batch is bounded. With
+    the cap cut to a few grams, a batch splits into many rounds (docs
+    and single long docs span round edges) and every doc's hashes still
+    equal the unsplit call's, NULL and short docs included."""
+    import re
+
+    import numpy as np
+
+    from slurm2sql_spark.operators import textstats
+
+    ws = re.compile(r"[ \t\n\r\f]+")
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        None,
+        "tiny",
+        "12345678",
+        "aaaaaaaaaaaaaaaaaa",
+        "ünïcode tëxt thät is nöt ascii",
+        "the quick brown fox jumps over the lazy dog",
+        "ends with nul\x00\x00\x00\x00",
+    ]
+    want = textstats._gram_hashes_batch(list(texts), 8, ws)
+
+    rounds = []
+    real_unique = np.unique
+
+    def counting_unique(*a, **kw):
+        rounds.append(len(a[0]))
+        return real_unique(*a, **kw)
+
+    monkeypatch.setattr(textstats, "_GRAMS_PER_ROUND", 5)
+    monkeypatch.setattr(np, "unique", counting_unique)
+    got = textstats._gram_hashes_batch(list(texts), 8, ws)
+    monkeypatch.undo()
+
+    assert len(rounds) > 1 and max(rounds) <= 5
+    assert len(got) == len(want)
+    for g, w_ in zip(got, want):
+        if w_ is None:
+            assert g is None
+        else:
+            assert list(g) == list(w_)

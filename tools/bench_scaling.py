@@ -175,10 +175,7 @@ SPARK_ONLY = [
     "dedup_incremental",
     "sim_quantized_recall",
     "pack_sequences",
-    "dedup_winnow_fast",
     "dedup_keep_best",
-    # r10: production positional-winnow kernel (rows-only twin)
-    "dedup_exact_substring_fast",
 ]
 
 # floor-bound micro-queries (VERDICT r6 #4): correct minimal plans that
@@ -347,9 +344,9 @@ _AGG_WRAP_SQL = "SELECT count(*) AS n, sum(hash(t)) AS h FROM ({sql}) t"
 # correctness check (50k docs -> 2.5e9 candidate pairs), not a baseline.
 X100_SPARK_ONLY = [
     "dedup_minhash_lsh",
-    # r10: production positional-winnow kernel at 100x (rows-only twin;
-    # the md5 oracle kernel follows dedup_winnow's 1x/10x precedent)
-    "dedup_exact_substring_fast",
+    # the positional-winnow kernel's 100x row is dedup_exact_substring,
+    # dual-measured in X100_QUERIES (listing it here too would time it
+    # twice)
 ]
 DST100 = os.environ.get("SPARK_GRAFT_SCALE_DST100", "/tmp/spark_graft_x100")
 K100 = int(os.environ.get("SPARK_GRAFT_SCALE_K100", "100"))
