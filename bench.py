@@ -47,8 +47,8 @@ def _run_all(
     times: dict[str, float] = {}
     for name, spec in QUERIES.items():
         # Drop memoized frames BEFORE each entry, not just between
-        # passes: entries that share `_memo` frames (dedup_keep_best /
-        # dedup_components, the sim_* recall pairs, the eff rollup)
+        # passes: entries that share `_memo` values (dedup_keep_best /
+        # dedup_components, the sim_* recall pairs, the shared fits)
         # otherwise read hot or cold depending purely on catalog order,
         # and a gate rotation shifts their reported wall 5x with zero
         # code change (r9 "What's wrong" #5). Per-entry clearing makes

@@ -1941,13 +1941,14 @@ FROM e
 """
 
 
-#: per-(session, sf_dir, name) memo for expensive DataFrames consumed by
-#: more than one catalog entry (the flagship eff rollup feeds
-#: sacct_eff + sacct_user_rollup; the exact/approx top-k frames feed
-#: both their own entries and the recall checks). Entries are
-#: persisted; ``drop_caches()`` releases them (bench calls it between
-#: timed passes so every pass pays full compute).
-_RESULT_CACHE: dict[tuple, DataFrame] = {}  # (session key, sf_dir, name)
+#: per-(session, sf_dir, name) memo for values more than one catalog
+#: entry consumes (the exact/approx top-k frames feed both their own
+#: entries and the recall checks; the train + consume families share
+#: one fit). DataFrames are persisted; driver-side values (BPE merge
+#: tables, classifier weights — k / m-bounded, never corpus-sized) are
+#: stored as built. ``drop_caches()`` releases everything (bench calls
+#: it before every entry so each reported wall is a SOLO wall).
+_MEMO: dict[tuple, object] = {}  # (session key, sf_dir, name)
 
 
 def _session_key(spark: SparkSession):
@@ -1965,132 +1966,72 @@ def _session_key(spark: SparkSession):
         ) or id(spark)
 
 
-def _evict_other_sessions(skey) -> None:
-    """Bound stale-session growth WITHOUT nuking the live session's
-    memos: r13 found the old `drop_caches()`-on-overflow wiped
-    `_PY_CACHE` mid-pass once a sweep populated >24 frames, silently
-    re-running every shared fit (the bug showed up as bpe_frozen /
-    lang_frozen paying full training in SCALING walls)."""
-    for cache in (_RESULT_CACHE, _PY_CACHE):
-        for k in [k for k in cache if k[0] != skey]:
-            v = cache.pop(k)
-            try:
-                v.unpersist()
-            except Exception:
-                pass  # python value or dead session
+def _release(value) -> None:
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # session may be gone
 
 
-def _memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+def _memo(spark: SparkSession, sf_dir: str, name: str, build):
     skey = _session_key(spark)
     key = (skey, sf_dir, name)
-    df = _RESULT_CACHE.get(key)
-    if df is None:
-        if len(_RESULT_CACHE) > 24:
-            _evict_other_sessions(skey)
-        df = build().persist()
-        _RESULT_CACHE[key] = df
-    return df
-
-
-#: Driver-side sibling of ``_RESULT_CACHE`` for SMALL Python values
-#: produced by eager in-entry training loops (BPE merge tables,
-#: classifier weight dicts — k / m / (k x m)-bounded, never
-#: corpus-sized). Entries that demonstrate the same fit (train +
-#: consume families like lang_classifier / lang_mix_trained) share one
-#: fit per (session, sf_dir) instead of re-running the GD / merge
-#: rounds per entry — the `_lm_scored` precedent for driver-side state.
-#: Cleared by ``drop_caches`` with everything else, so bench.py's
-#: per-entry cache drop keeps every reported wall a true SOLO wall.
-_PY_CACHE: dict[tuple, object] = {}
-
-
-def _py_memo(spark: SparkSession, sf_dir: str, name: str, build):
-    skey = _session_key(spark)
-    key = (skey, sf_dir, name)
-    if key not in _PY_CACHE:
-        if len(_PY_CACHE) > 24:
-            _evict_other_sessions(skey)
-        _PY_CACHE[key] = build()
-    return _PY_CACHE[key]
+    if key not in _MEMO:
+        if len(_MEMO) > 24:
+            # Bound stale-session growth WITHOUT dropping the live
+            # session's memos: r13 found a full clear on overflow wiped
+            # the shared fits mid-pass once a sweep populated >24
+            # values, silently re-running every fit (bpe_frozen /
+            # lang_frozen paid full training in SCALING walls).
+            for k in [k for k in _MEMO if k[0] != skey]:
+                _release(_MEMO.pop(k))
+        value = build()
+        _MEMO[key] = value.persist() if isinstance(value, DataFrame) else value
+    return _MEMO[key]
 
 
 def drop_caches() -> None:
-    """Unpersist and forget every memoized frame (all sessions)."""
-    for df in _RESULT_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session may be gone
-    _RESULT_CACHE.clear()
-    _PY_CACHE.clear()
+    """Unpersist and forget every memoized value (all sessions)."""
+    for value in _MEMO.values():
+        _release(value)
+    _MEMO.clear()
     from slurm2sql_spark.operators.textstats import release_caches
 
     release_caches()
 
 
-def _eff_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship eff rollup, persisted once per (session, sf_dir).
-
-    ``sacct_eff`` and ``sacct_user_rollup`` both consume this ~1-row-per-
-    job frame (15 columns), so a session running both pays the
-    synthesize -> parse -> aggregate pipeline once instead of twice.
-    Ratios are quantized here (q6) so every consumer sees identical
-    values.
+def _eff_q6(slurm: DataFrame) -> DataFrame:
+    """The eff rollup with its ratios quantized (q6), as both flagship
+    entries report it.
 
     Deliberately EXCLUDES TotDiskRead/TotDiskWrite: no catalog consumer
-    surfaces them (``sacct_user_rollup`` prunes the I/O-rate outputs),
-    and because the persist boundary pins every memoized column, the
-    two extra sum-aggregates plus one fs/disk TRES unit-parse were
-    measured to DOUBLE the whole map stage at 10x sf0.1 (33s -> 15s
-    wall, 304s -> 190s task CPU — one expression tips the generated
-    projection over a JIT/codegen cliff). Consumers that need the
-    rates (views.user_rollup resolution) append typed NULLs.
-    """
-    def build() -> DataFrame:
-        raw = _sacct_raw_from_lineitem(spark, sf_dir)
-        slurm = slurm_transform(raw, now=1_700_000_000)
-        return (
-            eff(slurm)
-            .select(
-                "JobID",
-                "JobName",
-                "User",
-                "State",
-                _q6("CPUeff").alias("CPUeff"),
-                "cpu_s_reserved",
-                "cpu_s_used",
-                _q6("MemEff").alias("MemEff"),
-                "AllocMem",
-                "TotalMem",
-                "Elapsed",
-                "NCPUS",
-                "NGpus",
-                _q6("GpuEff").alias("GpuEff"),
-                "gpu_s_reserved",
-            )
-        )
-
-    return _memo(spark, sf_dir, "eff", build)
-
-
-def _sacct_eff_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _eff_shared(spark, sf_dir).select(
+    surfaces them, and the two extra sum-aggregates plus one fs/disk
+    TRES unit-parse measured to DOUBLE the whole map stage at 10x sf0.1
+    (33s -> 15s wall, 304s -> 190s task CPU — one expression tips the
+    generated projection over a JIT/codegen cliff)."""
+    return eff(slurm).select(
         "JobID",
         "JobName",
         "User",
         "State",
-        "CPUeff",
+        _q6("CPUeff").alias("CPUeff"),
         "cpu_s_reserved",
         "cpu_s_used",
-        "MemEff",
+        _q6("MemEff").alias("MemEff"),
         "AllocMem",
         "TotalMem",
         "Elapsed",
         "NCPUS",
         "NGpus",
-        "GpuEff",
+        _q6("GpuEff").alias("GpuEff"),
         "gpu_s_reserved",
     )
+
+
+def _sacct_eff_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    raw = _sacct_raw_from_lineitem(spark, sf_dir)
+    return _eff_q6(slurm_transform(raw, now=1_700_000_000))
 
 
 register(
@@ -2117,27 +2058,7 @@ register(
     "(reference eff view slurm2sql.py:950-987).",
 )
 def sacct_eff_typed(spark, sf_dir):
-    slurm = _typed_slurm_from_lineitem(spark, sf_dir)
-    return (
-        eff(slurm)
-        .select(
-            "JobID",
-            "JobName",
-            "User",
-            "State",
-            _q6("CPUeff").alias("CPUeff"),
-            "cpu_s_reserved",
-            "cpu_s_used",
-            _q6("MemEff").alias("MemEff"),
-            "AllocMem",
-            "TotalMem",
-            "Elapsed",
-            "NCPUS",
-            "NGpus",
-            _q6("GpuEff").alias("GpuEff"),
-            "gpu_s_reserved",
-        )
-    )
+    return _eff_q6(_typed_slurm_from_lineitem(spark, sf_dir))
 
 
 def _typed_slurm_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2149,7 +2070,7 @@ def _typed_slurm_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No ``fan_out`` here, deliberately: the string path repartitions
     because synthesis+parse is compute-heavy per row (26.5s -> 4.6s,
-    tools/profile_part.py), but this path is narrow integer arithmetic
+    see plans/partitioning.py), but this path is narrow integer arithmetic
     — the groupBy shuffle spreads the aggregation regardless, and the
     extra exchange measured 2.05s -> 1.0s removed (sf0.1)."""
     li = _t(spark, sf_dir, "lineitem").select(
@@ -2238,54 +2159,29 @@ FROM e GROUP BY "User"
     doc="A9: second-level per-user rollup of the eff view with weighted means.",
 )
 def sacct_user_rollup(spark, sf_dir):
-    # typed NULL columns satisfy views.user_rollup's resolution while
-    # the entry's final select prunes their aggregates out of the plan
-    # (see _eff_shared's docstring for the measured cost of pinning
-    # columns through the persist boundary).
-    #
-    # Cold-start pruning (optimization r16, guide §2.3/§6; VERDICT r15
-    # #4 — the rollup re-derived the FULL eff pipeline for a 5-column
-    # output): the shared memo's persist boundary pins all 15 eff
-    # columns, so a cold rollup paid every synthesis/parse expression.
-    # When a sibling (sacct_eff) already materialized the memo, reuse
-    # it — marginal cost ~0, the sharing the memo exists for. On a COLD
-    # session (the bench's per-entry cache-drop regime) build the
-    # pipeline WITHOUT a persist boundary so Catalyst prunes the
-    # synthesis+parse down to the four columns the rollup reads
-    # (User, CPUeff, Elapsed, NCPUS): solo min-of-3 4.52 -> 3.28 s,
-    # outputs bit-identical (the five selected outputs never reference
-    # the NULLed columns). The shared memo is NOT seeded with the
-    # pruned frame — a later sacct_eff still builds the full one.
-    if (_session_key(spark), sf_dir, "eff") in _RESULT_CACHE:
-        e = _eff_shared(spark, sf_dir).withColumns(
+    # The rollup reads four eff columns (User, CPUeff, Elapsed, NCPUS);
+    # with no persist boundary in between, Catalyst prunes synthesis
+    # and parsing down to them (optimization r16: solo min-of-3
+    # 4.52 -> 3.28 s against reading a persisted 15-column eff frame).
+    # Typed NULL columns satisfy views.user_rollup's resolution while
+    # the final select prunes their aggregates out of the plan.
+    raw = _sacct_raw_from_lineitem(spark, sf_dir)
+    e = (
+        eff(slurm_transform(raw, now=1_700_000_000))
+        .select("User", _q6("CPUeff").alias("CPUeff"), "Elapsed", "NCPUS")
+        .withColumns(
             {
-                "TotDiskRead": F.lit(None).cast("double"),
-                "TotDiskWrite": F.lit(None).cast("double"),
+                c: F.lit(None).cast("double")
+                for c in (
+                    "MemEff",
+                    "NGpus",
+                    "GpuEff",
+                    "TotDiskRead",
+                    "TotDiskWrite",
+                )
             }
         )
-    else:
-        raw = _sacct_raw_from_lineitem(spark, sf_dir)
-        e = (
-            eff(slurm_transform(raw, now=1_700_000_000))
-            .select(
-                "User",
-                _q6("CPUeff").alias("CPUeff"),
-                "Elapsed",
-                "NCPUS",
-            )
-            .withColumns(
-                {
-                    c: F.lit(None).cast("double")
-                    for c in (
-                        "MemEff",
-                        "NGpus",
-                        "GpuEff",
-                        "TotDiskRead",
-                        "TotDiskWrite",
-                    )
-                }
-            )
-        )
+    )
     return user_rollup(e).select(
         "User",
         "NJobs",
@@ -4081,22 +3977,16 @@ def _stream_state_partitions(spark, n_rows: int):
     multi-core execution exercised at gate scale) and capped at the
     session's ``spark.sql.shuffle.partitions`` so a production session
     (where that conf is sized for the cluster) is never reduced below
-    its own setting's intent; ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``
-    overrides the derivation outright. The conf is restored in
+    its own setting's intent. The conf is restored in
     ``finally`` — state partition count is pinned into the checkpoint
     at the stream's first run, and every parity gate starts from a
     fresh checkpoint, so this never re-shapes an existing stream.
     """
     import math
-    import os
 
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        n = max(1, int(env))
-    else:
-        n = min(max(4, math.ceil(n_rows / 50_000)), int(old))
+    n = min(max(4, math.ceil(n_rows / 50_000)), int(old))
     spark.conf.set(key, str(n))
     try:
         yield
@@ -5047,7 +4937,7 @@ def _clf_fit_shared(spark, sf_dir):
             m=256, epochs=2, lr=5.0, salt="c1",
         )
 
-    return _py_memo(spark, sf_dir, "clf_fit_c1", build)
+    return _memo(spark, sf_dir, "clf_fit_c1", build)
 
 
 def _clf_labeled(spark, sf_dir):
@@ -5421,7 +5311,7 @@ def _lang_fit_shared(spark, sf_dir):
             m=256, epochs=_LANG_CLF_EPOCHS, lr=5.0, salt="l1",
         )
 
-    return _py_memo(spark, sf_dir, "lang_fit_l1", build)
+    return _memo(spark, sf_dir, "lang_fit_l1", build)
 
 
 def _lang_pred_shared(spark, sf_dir):
@@ -5661,7 +5551,7 @@ def _lang_frozen_params(spark, sf_dir):
         )
         return load_softmax_model(spark, model_path)
 
-    return _py_memo(spark, sf_dir, "lang_frozen_l1", build)
+    return _memo(spark, sf_dir, "lang_frozen_l1", build)
 
 
 def _lang_frozen_score(spark, sf_dir, docs):
@@ -6213,7 +6103,7 @@ def _bpe_merges_shared(spark, sf_dir):
             "merge_round"
         ).collect()
 
-    return _py_memo(spark, sf_dir, "bpe_merges8", build)
+    return _memo(spark, sf_dir, "bpe_merges8", build)
 
 
 #: bpe_train's output schema — rebuilt from the memoized rows so the
@@ -8470,160 +8360,3 @@ def url_domain_psl_q(spark, sf_dir):
     return docs.select(
         "doc_id", "host", registrable_domain(F.col("host")).alias("domain")
     )
-
-
-# ---------------------------------------------------------------------------
-# Driver-gate ordering.
-#
-# The round driver snapshots only the FIRST `_GATE_WINDOW` entries of
-# ``queries()`` into CORRECTNESS_r{N}.json (observed r6/r7: exactly 50
-# rows for a 62-entry catalog — `__spark_entry__.py` iterates this dict
-# in insertion order). Registration order above is narrative (Group A
-# joins first, LLM-pipeline ops later), which in r7 pushed the 12
-# newest entries — including six that had NEVER been driver-gated —
-# outside the snapshot window (VERDICT r7 item #1).
-#
-# Rebuild the dict in gate-priority order instead. Since r15 the
-# rotation is POLICY EVALUATED AT IMPORT TIME, not a hand-maintained
-# list (VERDICT r14 #1: two consecutive rounds the committed static
-# window re-redded `test_driver_row_staleness_rotation_policy` the
-# moment the driver wrote the next CORRECTNESS file — rotation FOR
-# round N is, by construction, stale AT round N+1's judge boundary).
-# The window now derives from the same artifacts the policy test
-# reads, so builder, driver and judge always agree:
-#   1. ``_GATE_PINNED`` — hand-maintained, small: entries that must
-#      gate THIS round regardless of staleness (new/churned code or
-#      oracle SQL, plus the rows-only dedup_simhash_fast, whose only
-#      gate is the driver's rows-only check — r12 lesson).
-#   2. Staleness fill — every other entry sorted stalest-first by its
-#      last driver-gated round (never-gated sorts first), computed
-#      from the committed CORRECTNESS_r*.json history; ties break by
-#      registration order. The stalest entries fill the remaining
-#      window slots, so the window self-rotates whenever a new
-#      CORRECTNESS file lands and nothing can rot past
-#      ceil(catalog/fill) ~ 3 rounds outside the window.
-#   3. ``_GATE_TAIL`` (computed) — the freshest remainder; the
-#      in-repo tests/test_oracle_parity.py suite re-proves every tail
-#      entry against DuckDB at sf0.01 each pytest run, and the
-#      judge's `tools/check_oracle.py` re-run covers them externally.
-# The dict is mutated in place because `bench.py` and
-# `__spark_entry__.py` hold a reference to the object itself.
-
-_GATE_WINDOW = 50
-
-# Entries that must sit INSIDE the driver window this round regardless
-# of staleness. Keep this SHORT — every pinned slot is one fewer
-# staleness-fill slot. Two stanzas:
-_GATE_PINNED = [
-    # the rows-only entry stays in-window EVERY round (r12 lesson):
-    # the tail's coverage contract is the oracle-parity pytest, which
-    # cannot express a no-oracle entry — the driver's rows-only check
-    # plus the pair-equality pytest are its gate.
-    "dedup_simhash_fast",
-    # r15 churn re-gates: the heavy-hitters protocol grew the
-    # D >= T exactness guard (ADVICE r14 #1), and the softmax oracle
-    # family's tokenizer class was canonicalized to [ \t\n\r\f]
-    # in _softmax_oracle_core + _LANG_CROSS_TAIL (ADVICE r14 #4) —
-    # every consumer of _LANG_CLF_CORE re-gates.
-    "heavy_hitters_protocol",
-    "lang_classifier_cross",
-    "lang_classifier",
-    "lang_mix_trained",
-    "lang_classifier_frozen",
-    # r15: entry code moved into the refresh_spec factory (results
-    # identical, but the path re-gates on churn like any other)
-    "incremental_refresh",
-]
-
-
-def _gate_history() -> tuple[dict[str, int], int]:
-    """(last driver-gated round per entry, newest round on disk) from
-    the committed CORRECTNESS_r*.json artifacts at the repo root —
-    the exact inputs tests/test_gate_order.py's policy test reads, so
-    the committed window and the policy can never disagree."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    latest = 0
-    for f in sorted(_glob.glob(_os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"r(\d+)", _os.path.basename(f))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        latest = max(latest, rnd)
-        try:
-            with open(f) as fh:
-                rows = _json.load(fh)
-        except (ValueError, OSError):
-            continue
-        for name in rows:
-            last[name] = max(last.get(name, 0), rnd)
-    return last, latest
-
-
-def _compute_gate_rotation(
-    last: dict[str, int] | None = None,
-) -> tuple[list[str], list[str]]:
-    """Window front (pinned + stalest fill) and tail for the round
-    ABOUT to run (latest CORRECTNESS round + 1). ``last`` overrides
-    the on-disk history — tests use it to prove the policy stays
-    green AFTER the next CORRECTNESS file lands (VERDICT r14 #1/#6)."""
-    if last is None:
-        last, _latest = _gate_history()
-    names = list(QUERIES)
-    order = {n: i for i, n in enumerate(names)}
-    pinned = [n for n in dict.fromkeys(_GATE_PINNED) if n in QUERIES]
-    rest = [n for n in names if n not in set(pinned)]
-    rest.sort(key=lambda n: (last.get(n, 0), order[n]))
-    fill = max(0, _GATE_WINDOW - len(pinned))
-    return pinned + rest[:fill], rest[fill:]
-
-
-_GATE_PRIORITY, _GATE_TAIL = _compute_gate_rotation()
-
-
-def gate_rotation_report() -> dict:
-    """Transparency hook (VERDICT r14 #6): what the policy decided and
-    why, so the committed window and the next round's expectation are
-    inspectable (tools + tests print this instead of re-deriving)."""
-    last, latest = _gate_history()
-    names = list(QUERIES)
-    window = set(names[: _GATE_WINDOW])
-    current = latest + 1
-    stale = sorted(
-        (n for n in names if n in last and current - last[n] >= 3),
-        key=lambda n: last[n],
-    )
-    return {
-        "current_round": current,
-        "window": names[:_GATE_WINDOW],
-        "pinned": [n for n in _GATE_PINNED if n in QUERIES],
-        "stale_cohort": [(n, last[n]) for n in stale],
-        "stale_in_window": [n for n in stale if n in window],
-        "never_gated": [n for n in names if n not in last],
-    }
-
-
-def _apply_gate_order() -> None:
-    # dict.fromkeys: defensive — a name must never double-count
-    # against the window even if listed twice upstream
-    front = list(dict.fromkeys(n for n in _GATE_PRIORITY if n in QUERIES))
-    tail = list(dict.fromkeys(n for n in _GATE_TAIL if n in QUERIES))
-    mid = [n for n in QUERIES if n not in set(front) | set(tail)]
-    ordered = front + mid + tail
-    if len(ordered) - len(tail) > _GATE_WINDOW:
-        raise AssertionError(
-            f"{len(ordered) - len(tail)} non-tail catalog entries exceed the "
-            f"{_GATE_WINDOW}-row driver gate window; extend _GATE_TAIL"
-        )
-    snapshot = {n: QUERIES[n] for n in ordered}
-    QUERIES.clear()
-    QUERIES.update(snapshot)
-
-
-_apply_gate_order()
-

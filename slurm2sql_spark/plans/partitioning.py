@@ -6,7 +6,7 @@ yields a 1-3 partition scan no matter how many cores exist — and any
 compute-heavy narrow stage downstream (string synthesis, parsing,
 shingling, vector math) runs nearly serial. Measured on the sf0.1
 bench: the full sacct transform drops 26.5s -> 4.6s once the input is
-spread to 64 partitions (tools/profile_part.py).
+spread to 64 partitions.
 
 At real scale the scan already has >= cluster-parallelism splits and
 ``fan_out`` is a no-op — it never *coalesces*, and the repartition it

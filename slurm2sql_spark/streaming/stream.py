@@ -483,6 +483,10 @@ def heavy_hitters_stream(
     return item_stream.writeStream.foreachBatch(_land)
 
 
+#: most kept rows per micro-batch that export_stream packs driver-locally
+_EXPORT_LOCAL_CAP = 1_000_000
+
+
 def export_stream(
     doc_stream: DataFrame,
     path: str,
@@ -512,11 +516,10 @@ def export_stream(
     a clean restart).
 
     Scale shape per micro-batch: the quality gate is a zero-exchange
-    scan projection. Below ``SPARK_GRAFT_EXPORT_LOCAL_CAP`` kept rows
-    (default 1M; 0 disables) the packing + serpentine assignment run
-    DRIVER-LOCAL on the collected ``(id, src, n_words)`` triples —
-    bit-identical by ``sharding.pack_assign_local``'s pytest-pinned
-    equivalence — so a micro-batch costs ONE zero-exchange collect plus
+    scan projection. Below ``_EXPORT_LOCAL_CAP`` (1M) kept rows the
+    packing + serpentine assignment run DRIVER-LOCAL on the collected
+    ``(id, src, n_words)`` triples — bit-identical by
+    ``sharding.pack_assign_local``'s pytest-pinned equivalence — so a micro-batch costs ONE zero-exchange collect plus
     one local-relation write instead of three chained shuffles (pack
     window on source, serpentine window on grp, write repartition;
     optimization r16, guide §2.4 — at gate scale those exchanges were
@@ -532,8 +535,6 @@ def export_stream(
     Returns the ``DataStreamWriter`` (caller picks trigger/checkpoint
     and calls ``start()``).
     """
-    import os
-
     from pyspark.sql import types as T
 
     from slurm2sql_spark.operators.packing import pack_sequences
@@ -552,14 +553,14 @@ def export_stream(
             id_col, source_col, "n_words"
         )
         out_dir = f"{path}/batch={int(batch_id)}"
-        cap = int(os.environ.get("SPARK_GRAFT_EXPORT_LOCAL_CAP", "1000000"))
+        cap = _EXPORT_LOCAL_CAP
         f_id, f_src = kept.schema.fields[0], kept.schema.fields[1]
         # the local write maps id/src to these Arrow types; any other
         # dtype takes the distributed path, which is dtype-agnostic
         arrow_of = {"long": "int64", "integer": "int32", "string": "string"}
         id_t = arrow_of.get(f_id.dataType.typeName())
         src_t = arrow_of.get(f_src.dataType.typeName())
-        local = cap > 0 and id_t is not None and src_t is not None
+        local = id_t is not None and src_t is not None
         rows = kept.limit(cap + 1).collect() if local else None
         if rows is not None and len(rows) <= cap:
             import pyarrow as pa

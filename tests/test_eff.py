@@ -166,22 +166,3 @@ def test_schema_evolution_missing_columns(spark):
     assert row["MaxRSS"] is None
     assert row["End"] is None
     assert row["Time"] is None  # End missing behaves like '' -> NULL
-
-
-def test_user_rollup_cold_pruned_path_equals_warm_memo_path(spark):
-    """The r16 cold-start pruned pipeline (built when the shared eff
-    memo is absent) must return the exact rows the warm memo-reuse
-    path returns — same grouping, same quantized weighted means."""
-    from slurm2sql_spark import catalog
-    from slurm2sql_spark.catalog import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    q = QUERIES["sacct_user_rollup"].spark
-    catalog.drop_caches()
-    cold = sorted(map(tuple, q(spark, sf).collect()))
-    # materialize the shared memo the way a sibling entry would
-    QUERIES["sacct_eff"].spark(spark, sf).count()
-    assert (catalog._session_key(spark), sf, "eff") in catalog._RESULT_CACHE
-    warm = sorted(map(tuple, q(spark, sf).collect()))
-    catalog.drop_caches()
-    assert cold == warm

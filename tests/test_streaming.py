@@ -484,6 +484,23 @@ def test_export_stream_unmapped_id_dtype_falls_back(spark, tmp_path):
     _export_stream_round_trip(spark, tmp_path, "double")
 
 
+def test_export_stream_above_local_cap_takes_distributed_path(
+    spark, tmp_path, monkeypatch
+):
+    """An int-id batch with more kept rows than ``_EXPORT_LOCAL_CAP``
+    skips the driver-local packer and still lands every kept doc
+    exactly once through the distributed pack/shard path."""
+    from slurm2sql_spark.operators import sharding
+    from slurm2sql_spark.streaming import stream
+
+    def _local_path_taken(*args, **kwargs):
+        raise AssertionError("batch above the cap was packed locally")
+
+    monkeypatch.setattr(stream, "_EXPORT_LOCAL_CAP", 1)
+    monkeypatch.setattr(sharding, "pack_assign_local", _local_path_taken)
+    _export_stream_round_trip(spark, tmp_path, "int")
+
+
 def _export_stream_round_trip(spark, tmp_path, id_type):
     import os
 
