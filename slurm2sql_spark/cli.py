@@ -620,51 +620,29 @@ def ingest_cli(spark: SparkSession, argv) -> str:
         return f"wrote {out.count()} rows to {args.table}"
     if args.sacct_dump:
         from slurm2sql_spark.sinks.parquet_sink import upsert, write_overwrite
+        from slurm2sql_spark.sources.csv_source import (
+            sacct_dump_scan,
+            sacct_dump_scan_stitched,
+        )
 
-        errors: list = []
-        n_errors = 0
-        bad = None
-        if args.stitch_lines:
-            # opt-in repair path, now DISTRIBUTED: safe lines parse in
-            # place; only suspect runs (short/long lines + partition
-            # firsts) route through a single sequential repair task —
-            # a 100-TB dump with embedded newlines stays scale-parallel
-            # (csv_source.sacct_dump_scan_stitched)
-            from slurm2sql_spark.operators.transform import slurm_transform
-            from slurm2sql_spark.sources.csv_source import (
-                sacct_dump_scan_stitched,
-            )
-
-            ok, bad = sacct_dump_scan_stitched(spark, args.sacct_dump)
-            typed = slurm_transform(ok)
-        else:
-            # default: executor-side line scan — a multi-GB dump never
-            # touches driver memory (the error COUNT is computed
-            # distributedly too; no collect of bad lines). Malformed
-            # lines (wrong field arity, e.g. a JobName with an embedded
-            # newline) are counted and reported with exit 1, same
-            # contract as the stitch path (reference
-            # slurm2sql.py:785-788) — but not repaired; the error
-            # message points at --stitch-lines.
-            from slurm2sql_spark.operators.transform import slurm_transform
-            from slurm2sql_spark.sources.csv_source import sacct_dump_scan
-
-            ok, bad = sacct_dump_scan(spark, args.sacct_dump)
-            typed = slurm_transform(ok)
-        if args.jobs_only:
-            from pyspark.sql import functions as F
-
-            typed = typed.filter(F.col("JobStep").isNull())
+        # Both scans are distributed and count malformed lines (wrong
+        # field arity, e.g. a JobName with an embedded newline) without
+        # collecting them; --stitch-lines also repairs newline-split
+        # records, routing only suspect runs through one sequential task.
+        # Malformed lines are reported with exit 1 (reference
+        # slurm2sql.py:785-788).
+        scan = sacct_dump_scan_stitched if args.stitch_lines else sacct_dump_scan
+        ok, bad = scan(spark, args.sacct_dump)
+        typed = slurm_transform(ok, jobs_only=args.jobs_only)
         if args.update:
             upsert(spark, typed, args.table, format=args.table_format)
         else:
             write_overwrite(typed, args.table, format=args.table_format)
         n = api.open_table(spark, args.table, format=args.table_format).count()
-        if bad is not None:
-            # count AFTER the write so the scan for good rows ran first
-            # (one scan for data, one cheap scan for the count — never
-            # a driver-side collect of the bad lines themselves)
-            n_errors = bad.count()
+        # count AFTER the write so the scan for good rows ran first
+        # (one scan for data, one cheap scan for the count — never a
+        # driver-side collect of the bad lines themselves)
+        n_errors = bad.count()
         if n_errors:
             print(f"wrote {n} rows to {args.table}", file=sys.stderr)
             print(f"Completed with {n_errors} errors", file=sys.stderr)

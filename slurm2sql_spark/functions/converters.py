@@ -14,11 +14,15 @@ for counts). No suffix means the bare number.
 Null contract: empty string -> NULL everywhere; sentinel strings
 (``Unknown``, ``None``, ``UNLIMITED``, ``Partition_Limit``) -> NULL
 where the reference maps them (slurm2sql.py:67-73, 87-89, 117-120).
+
+Construction: each converter builds a fresh Column tree per call (dozens
+of py4j calls for the branch-free parsers). Callers that apply them on
+every ingest build them once per process and reuse the Column objects
+(``operators.transform``): a Column names its inputs with ``F.col`` and
+belongs to no DataFrame, so one tree serves every later frame.
 """
 
 from __future__ import annotations
-
-import functools
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -46,111 +50,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# --- construction-cost control: SQL expression templates -------------------
-#
-# Every Column-API call is a py4j round trip. The branch-free converters
-# below build 40-60 JVM calls each, and slurm_transform invokes them
-# ~40 times per plan — measured 17k round trips ≈ 4-6 s of pure
-# DRIVER-side construction per fresh plan (the execution itself is
-# whole-stage-codegen'd and fast). Prepared-statement trick: build the
-# expression tree once per distinct input expression, render it to SQL
-# text, and reconstruct every later identical call with a single
-# F.expr() parse. Falls back silently to direct construction where SQL
-# rendering is unavailable (Spark Connect Columns have no _jc) — the
-# result is identical either way, only construction cost differs.
-
-# Thread-safety: this cache (and transform._PLAN_SQL_CACHE) relies on
-# GIL-atomic dict get/set only — concurrent driver threads may at worst
-# duplicate one template construction, never corrupt.  A None (Connect)
-# entry persists if the process later switches to a classic session;
-# that staleness costs construction speed, never correctness.
-_SQL_TEMPLATE_CACHE: dict[tuple, str | list[str]] = {}
-
-#: JVM handle to the classic-mode ColumnNode -> catalyst Expression
-#: converter (Spark 4 removed Column.expr()); lazily bound, re-bound
-#: once if the JVM restarted under us.
-_NODE_CONVERTER = None
-
-
-def _node_converter():
-    global _NODE_CONVERTER
-    if _NODE_CONVERTER is None:
-        from pyspark import SparkContext
-
-        jvm = SparkContext._jvm
-        cls = jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.classic.ColumnNodeToExpressionConverter$"
-        )
-        _NODE_CONVERTER = cls.getField("MODULE$").get(None)
-    return _NODE_CONVERTER
-
-
-def _col_sql(col: Column | str) -> str | None:
-    global _NODE_CONVERTER
-    try:
-        conv = _node_converter()
-    except Exception:
-        return None  # no classic JVM (Spark Connect) — direct build path
-    try:
-        return conv.apply(_c(col)._jc.node()).sql()
-    except Exception:
-        # Two distinct failures land here: THIS expression cannot
-        # render (keep the binding — other expressions still can), or
-        # the JVM restarted under us (handle is dead — rebind next
-        # call). Distinguish with a cheap liveness probe instead of
-        # unconditionally clearing, which would re-pay Class.forName
-        # reflection on every unrenderable expression.
-        try:
-            conv.toString()
-        except Exception:
-            _NODE_CONVERTER = None
-        return None
-
-
-def cached_columns(key: tuple, build) -> list[Column]:
-    """Build a LIST of Column expressions once per ``key``, render each
-    to SQL text, and replay later calls as one ``F.expr`` parse per
-    element — the list-shaped sibling of ``sql_templated`` for
-    generated expression families (64 minhash aggs, 64 simhash bit
-    sums, band explodes). The expressions must reference fixed column
-    names; parameters that change the tree must be part of ``key``.
-    Falls back to the direct build when rendering is unavailable."""
-    sqls = _SQL_TEMPLATE_CACHE.get(key)
-    if sqls is None:
-        cols = build()
-        rendered = [_col_sql(c) for c in cols]
-        if any(s is None for s in rendered):
-            return cols
-        _SQL_TEMPLATE_CACHE[key] = rendered
-        return cols
-    return [F.expr(s) for s in sqls]
-
-
-def sql_templated(fn):
-    """Memoize ``fn``'s expression tree as re-parseable SQL text, keyed
-    by (converter name, input-expression SQL). Non-default extra
-    arguments bypass the cache (they change the tree)."""
-
-    @functools.wraps(fn)
-    def wrapper(col: Column | str, *args, **kwargs) -> Column:
-        if args or kwargs:
-            return fn(col, *args, **kwargs)
-        in_sql = _col_sql(col)
-        if in_sql is None:
-            return fn(col)
-        key = (fn.__qualname__, in_sql)
-        out = _SQL_TEMPLATE_CACHE.get(key)
-        if out is None:
-            built = fn(col)
-            rendered = _col_sql(built)
-            if rendered is None:
-                return built
-            _SQL_TEMPLATE_CACHE[key] = out = rendered
-        return F.expr(out)
-
-    return wrapper
-
-
 def _null_if_empty(c: Column, typed: Column, dtype: str) -> Column:
     """'' or NULL input -> typed NULL, else the converted expression."""
     return F.when(c.isNull() | (c == ""), F.lit(None).cast(dtype)).otherwise(typed)
@@ -159,27 +58,23 @@ def _null_if_empty(c: Column, typed: Column, dtype: str) -> Column:
 # --- C1-C4: casts with null guards (reference slurm2sql.py:47-65) ----------
 
 
-@sql_templated
 def int_(col: Column | str) -> Column:
     """Strict integer (reference slurm2sql.py:47-50)."""
     return _c(col).cast("long")
 
 
-@sql_templated
 def nullint(col: Column | str) -> Column:
     """Integer, '' -> NULL (reference slurm2sql.py:52-55)."""
     c = _c(col)
     return _null_if_empty(c, c.cast("long"), "long")
 
 
-@sql_templated
 def nullstr(col: Column | str) -> Column:
     """String, '' -> NULL (reference slurm2sql.py:57-60)."""
     c = _c(col)
     return _null_if_empty(c, c, "string")
 
 
-@sql_templated
 def nullstr_strip(col: Column | str) -> Column:
     """Trimmed string, '' -> NULL (reference slurm2sql.py:62-65)."""
     c = _c(col)
@@ -189,7 +84,6 @@ def nullstr_strip(col: Column | str) -> Column:
 # --- C5/C8/C9: timestamps (reference slurm2sql.py:67-120) ------------------
 
 
-@sql_templated
 def unixtime(col: Column | str) -> Column:
     """``%Y-%m-%dT%H:%M:%S`` in the *session* timezone -> epoch seconds.
 
@@ -216,7 +110,6 @@ def slurm_timestamp(col: Column | str, rewind_s: int = 5) -> Column:
     )
 
 
-@sql_templated
 def str_unknown(col: Column | str) -> Column:
     """'Unknown' -> NULL, otherwise passthrough (slurm2sql.py:117-120)."""
     c = _c(col)
@@ -226,7 +119,6 @@ def str_unknown(col: Column | str) -> Column:
 # --- C7: Slurm duration grammar (reference slurm2sql.py:84-107) ------------
 
 
-@sql_templated
 def slurmtime(col: Column | str) -> Column:
     """Parse Slurm elapsed/limit strings to seconds (DoubleType).
 
@@ -318,33 +210,28 @@ def _unit_scaled(c: Column, base: int, truncate: bool = False) -> Column:
     return v * F.pow(F.lit(float(base)), k.cast(d))
 
 
-@sql_templated
 def float_bytes(col: Column | str) -> Column:
     """``2.5G`` -> bytes with binary units, 2**(10k) (slurm2sql.py:140-147)."""
     return _unit_scaled(_c(col), 1024)
 
 
-@sql_templated
 def int_bytes(col: Column | str) -> Column:
     """Binary units with the mantissa truncated *before* scaling
     (reference slurm2sql.py:149-151: ``int(float(x[:-1])) * 1024**k``)."""
     return _unit_scaled(_c(col), 1024, truncate=True).cast("long")
 
 
-@sql_templated
 def float_metric(col: Column | str) -> Column:
     """``2.5k`` -> 2500.0 with metric units, 1000**k (slurm2sql.py:153-160)."""
     return _unit_scaled(_c(col), 1000)
 
 
-@sql_templated
 def int_metric(col: Column | str) -> Column:
     """Metric units with the mantissa truncated *before* scaling
     (reference slurm2sql.py:162-164: ``int(float(x[:-1])) * 1000**k``)."""
     return _unit_scaled(_c(col), 1000, truncate=True).cast("long")
 
 
-@sql_templated
 def slurmmem(col: Column | str) -> Column:
     """Memory value: strip trailing ``n``/``c`` flag, then binary bytes
     (reference slurm2sql.py:122-127)."""

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from slurm2sql_spark.functions.converters import sql_templated
-
 __all__ = ["job_id_only", "job_id_nostep", "job_id_raw_only", "array_task_id", "job_step"]
 
 
@@ -22,21 +20,18 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-@sql_templated
 def job_id_only(col: Column | str) -> Column:
     """Leading integer: same for all array tasks / het offsets
     (reference slurm2sql.py:420-426)."""
     return F.regexp_extract(_c(col), r"^([0-9]+)", 1).cast("long")
 
 
-@sql_templated
 def job_id_raw_only(col: Column | str) -> Column:
     """Leading integer of JobIDRaw — unique per array task
     (reference slurm2sql.py:436-442)."""
     return job_id_only(col)
 
 
-@sql_templated
 def job_id_nostep(col: Column | str) -> Column:
     """``[0-9]+(_[0-9]+)?`` prefix: strips ``.step`` and ``+het``
     (reference slurm2sql.py:428-434). Kept as text — it can contain
@@ -46,7 +41,6 @@ def job_id_nostep(col: Column | str) -> Column:
     return F.when(out == "", F.lit(None).cast("string")).otherwise(out)
 
 
-@sql_templated
 def array_task_id(col: Column | str) -> Column:
     """Integer between ``_`` and ``.``; NULL for ``[...]`` pending-range
     forms and non-array jobs (reference slurm2sql.py:445-454)."""
@@ -60,7 +54,6 @@ def array_task_id(col: Column | str) -> Column:
     )
 
 
-@sql_templated
 def job_step(col: Column | str) -> Column:
     """Substring after the last ``.`` — textual, may be ``batch``/``extern``;
     NULL for allocation rows (reference slurm2sql.py:456-462)."""

@@ -23,6 +23,7 @@ All shuffle-parallel by construction — no collects, no driver loops:
 
 from __future__ import annotations
 
+import functools
 import logging
 import re as _re_mod
 from collections.abc import Callable
@@ -32,7 +33,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from slurm2sql_spark.functions.converters import cached_columns
 # the operators' one persist registry lives in textstats
 from slurm2sql_spark.operators.textstats import _persist, release_caches
 from slurm2sql_spark.plans import fan_out
@@ -349,14 +349,15 @@ def minhash_signatures(
     composing several shingle consumers pay the explode once.
     """
     sh = _shingles if _shingles is not None else shingles(df, id_col, text_col, n)
-    aggs = cached_columns(
-        ("minhash_aggs", num_hashes),
-        lambda: [
-            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    return sh.groupBy("id").agg(*aggs)
+    return sh.groupBy("id").agg(*_minhash_aggs(num_hashes))
+
+
+@functools.cache
+def _minhash_aggs(num_hashes: int) -> list[Column]:
+    return [
+        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
 
 
 def minhash_lsh_pairs(
@@ -412,25 +413,26 @@ def minhash_band_rows(
     assert num_hashes % bands == 0
     r = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes, _shingles)
-    (bb,) = cached_columns(
-        ("minhash_band_explode", bands, r),
-        lambda: [
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[F.col(f"h{b * r + i}") for i in range(r)]
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb")
-        ],
+    return sig.select("id", _band_explode(bands, r)).select(
+        "id", "bb.band", "bb.bucket"
     )
-    return sig.select("id", bb).select("id", "bb.band", "bb.bucket")
+
+
+@functools.cache
+def _band_explode(bands: int, r: int) -> Column:
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(*[F.col(f"h{b * r + i}") for i in range(r)]).alias(
+                        "bucket"
+                    ),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bb")
 
 
 def md5_token_hash60(c: Column) -> Column:
@@ -614,26 +616,26 @@ def simhash_signatures(
     # ((h>>i)&1 — long arithmetic, no CASE WHEN in the per-token hot
     # path) and compare 2*ones > n once per DOC after the map-side
     # combine. Same truth table including the tie (sum>0 <=> 2*ones>n).
-    bit_aggs = cached_columns(
-        ("simhash_bit_aggs", bits),
-        lambda: [F.count(F.lit(1)).alias("_n")]
-        + [
-            F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"b{i}")
-            for i in range(bits)
-        ],
-    )
-    bit_sums = toks.groupBy("id").agg(*bit_aggs)
+    bit_sums = toks.groupBy("id").agg(*_simhash_bit_sums(bits))
+    return bit_sums.select("id", _simhash_pack(bits))
 
-    def _pack():
-        packed = None
-        for i in range(bits):
-            bit = (2 * F.col(f"b{i}") > F.col("_n")).cast("long")
-            term = F.shiftleft(bit, i)
-            packed = term if packed is None else packed.bitwiseXOR(term)
-        return [packed.alias("simhash")]
 
-    (packed,) = cached_columns(("simhash_pack", bits), _pack)
-    return bit_sums.select("id", packed)
+@functools.cache
+def _simhash_bit_sums(bits: int) -> list[Column]:
+    return [F.count(F.lit(1)).alias("_n")] + [
+        F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"b{i}")
+        for i in range(bits)
+    ]
+
+
+@functools.cache
+def _simhash_pack(bits: int) -> Column:
+    packed = None
+    for i in range(bits):
+        bit = (2 * F.col(f"b{i}") > F.col("_n")).cast("long")
+        term = F.shiftleft(bit, i)
+        packed = term if packed is None else packed.bitwiseXOR(term)
+    return packed.alias("simhash")
 
 
 def simhash_near_dup_pairs(

@@ -77,7 +77,8 @@ def range_join(
     if overlap:
         raise ValueError(f"column collision between sides: {sorted(overlap)}")
 
-    from slurm2sql_spark.operators.transform import _bq as q
+    def q(name: str) -> str:  # backtick-quoted identifier for F.expr
+        return "`" + name.replace("`", "``") + "`"
 
     s, e, p = F.col(start), F.col(end), F.col(point)
     # Integer `div` binning: exact at any epoch magnitude (float floor

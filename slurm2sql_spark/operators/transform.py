@@ -39,9 +39,19 @@ for field ``gpu``; the anchored form does not). The public
 Missing input columns (schema evolution, e.g. post-20.11 sacct without
 ``ReqGRES``, reference slurm2sql.py:311-324 and test.py:373-380) become
 NULL-typed literals, so converters degrade to NULL instead of failing.
+
+Construction: the stage expressions are built once per process
+(``_stages``) and applied to every call's frame. Building them costs
+thousands of py4j calls, so rebuilding per call would dominate a small
+ingest's driver time. Reuse is sound because a Column refers to its
+inputs by name only; everything a call varies arrives as columns added
+in the first ``withColumns``: the NULL-filled missing fields and the
+``_now`` column that stage 3 reads for running jobs.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -57,55 +67,6 @@ def _null_if_empty(c: Column, dtype: str = "string") -> Column:
     return F.when(c.isNull() | (c == ""), F.lit(None).cast(dtype)).otherwise(c)
 
 
-# --- construction-cost control: whole-stage SQL templates -------------------
-#
-# Building the four projection stages through the Column API costs
-# thousands of py4j round trips per call (~1.5-6 s of pure DRIVER time
-# per fresh plan — execution is unaffected). Like the converter-level
-# templates (converters.sql_templated), the stage dictionaries are built
-# ONCE per (input columns, now) key, rendered to SQL text, and every
-# later call replays them as four selectExpr's — one py4j call each.
-# Falls back to the direct Column path when rendering is unavailable
-# (Spark Connect). Both paths share the same _stageN_exprs builders, so
-# there is a single source of truth for the semantics.
-
-_PLAN_SQL_CACHE: dict[tuple, tuple[list[str], ...]] = {}
-
-
-def _wc_sql(input_cols: list[str], d: dict[str, Column]) -> tuple[list[str], list[str]] | None:
-    """Render ``withColumns(d)`` over ``input_cols`` as a selectExpr
-    list (replacements in place, new columns appended — the exact
-    withColumns contract). Returns (select_list, output_cols); None if
-    any expression can't be rendered."""
-    out_sql: list[str] = []
-    out_cols: list[str] = []
-    for c in input_cols:
-        if c in d:
-            s = C._col_sql(d[c])
-            if s is None:
-                return None
-            out_sql.append(f"{s} AS {_bq(c)}")
-        else:
-            out_sql.append(_bq(c))
-        out_cols.append(c)
-    for name, col in d.items():
-        if name in input_cols:
-            continue
-        s = C._col_sql(col)
-        if s is None:
-            return None
-        out_sql.append(f"{s} AS {_bq(name)}")
-        out_cols.append(name)
-    return out_sql, out_cols
-
-
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier for selectExpr.  Column names flow
-    in from the sacct dump header (sacct_dump_scan), so an embedded
-    backtick must be doubled or the rendered SQL misparses."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def slurm_transform(
     raw: DataFrame, now: int | None = None, jobs_only: bool = False
 ) -> DataFrame:
@@ -117,50 +78,28 @@ def slurm_transform(
     ``jobs_only`` drops step rows during ingest (reference --jobs-only,
     slurm2sql.py:720-721, 1010-1014).
     """
+    s1, s2, s3, final = _stages()
     present = set(raw.columns)
-    missing = [f for f in RAW_FIELDS if f not in present]
-    if missing:
-        raw = raw.withColumns({f: F.lit(None).cast("string") for f in missing})
-
-    key = (tuple(raw.columns), now)
-    plan = _PLAN_SQL_CACHE.get(key)
-    if plan is None and key not in _PLAN_SQL_CACHE:
-        plan = _render_plan(list(raw.columns), now)
-        _PLAN_SQL_CACHE[key] = plan  # None is cached too (Connect)
-        if len(_PLAN_SQL_CACHE) > 64:  # schema-per-call caller guard
-            _PLAN_SQL_CACHE.clear()
-            _PLAN_SQL_CACHE[key] = plan
-    if plan is not None:
-        out = raw
-        for stage_sql in plan:
-            out = out.selectExpr(*stage_sql)
-        if jobs_only:
-            out = out.filter(F.col("JobStep").isNull())
-        return out
-    return _transform_columns_path(raw, now, jobs_only)
+    fill = {f: F.lit(None).cast("string") for f in RAW_FIELDS if f not in present}
+    fill["_now"] = _now_col(now)
+    out = (
+        raw.withColumns(fill)
+        .withColumns(s1)
+        .withColumns(s2)
+        .withColumns(s3)
+        .select(*final)
+    )
+    if jobs_only:
+        out = out.filter(F.col("JobStep").isNull())
+    return out
 
 
-def _render_plan(cols0: list[str], now: int | None) -> tuple[list[str], ...] | None:
-    now_col = _now_col(now)
-    r1 = _wc_sql(cols0, _stage1_exprs())
-    if r1 is None:
-        return None
-    s1, cols1 = r1
-    r2 = _wc_sql(cols1, _stage2_exprs())
-    if r2 is None:
-        return None
-    s2, cols2 = r2
-    r3 = _wc_sql(cols2, _stage3_exprs(now_col))
-    if r3 is None:
-        return None
-    s3, _ = r3
-    final: list[str] = []
-    for name, col in _final_cols():
-        s = C._col_sql(col)
-        if s is None:
-            return None
-        final.append(f"{s} AS {_bq(name)}")
-    return s1, s2, s3, final
+@functools.cache
+def _stages() -> tuple[dict[str, Column], dict[str, Column], dict[str, Column], list[Column]]:
+    """The three stage dicts and the aliased final projection, built once
+    per process (see Construction in the module docstring)."""
+    final = [col.alias(name) for name, col in _final_cols()]
+    return _stage1_exprs(), _stage2_exprs(), _stage3_exprs(), final
 
 
 def _now_col(now: int | None) -> Column:
@@ -169,24 +108,6 @@ def _now_col(now: int | None) -> Column:
         if now is not None
         else F.unix_timestamp(F.current_timestamp())
     )
-
-
-def _transform_columns_path(
-    raw: DataFrame, now: int | None, jobs_only: bool
-) -> DataFrame:
-    """Direct Column-API path (used when SQL rendering is unavailable);
-    semantically identical to the cached-SQL path by construction —
-    both apply the same _stageN_exprs over the same withColumns
-    contract."""
-    out = (
-        raw.withColumns(_stage1_exprs())
-        .withColumns(_stage2_exprs())
-        .withColumns(_stage3_exprs(_now_col(now)))
-        .select(*[col.alias(name) for name, col in _final_cols()])
-    )
-    if jobs_only:
-        out = out.filter(F.col("JobStep").isNull())
-    return out
 
 
 def _tres_get(src: str, key: str) -> Column:
@@ -284,7 +205,7 @@ def _stage2_exprs() -> dict[str, Column]:
     )
 
 
-def _stage3_exprs(now_col: Column) -> dict[str, Column]:
+def _stage3_exprs() -> dict[str, Column]:
     # --- stage 3: derived columns over cheap references
     end, start = F.col("End"), F.col("Start")
     nullexit = F.col("ExitCode").isNull() | (F.col("ExitCode") == "")
@@ -296,7 +217,7 @@ def _stage3_exprs(now_col: Column) -> dict[str, Column]:
             # '') short-circuits to unixtime(End); likewise any Start
             # except 'Unknown' means "running" -> now (slurm2sql.py:205-226).
             "Time": F.when(end.isNull() | (end != "Unknown"), F.col("_end_ts"))
-            .when(start.isNull() | (start != "Unknown"), now_col)
+            .when(start.isNull() | (start != "Unknown"), F.col("_now"))
             .otherwise(F.col("_submit_ts")),
             "QueueTime": F.col("_start_ts") - F.col("_submit_ts"),
             # R23: step CPU efficiency (slurm2sql.py:510-544). The

@@ -100,8 +100,10 @@ def upsert(
     partition directory is swapped — and affected partitions with no
     surviving rows are deleted, so keys whose partition value migrated
     (running job re-stamped to a new day) leave no stale duplicates.
-    Without partitioning the whole table is rewritten (fine for tests,
-    not for 100 TB — always partition in production).
+    Without partitioning the whole table is rewritten. No CLI or ``api``
+    path passes ``partition_cols``, so every ``ingest --update`` rewrites
+    the whole table; only ``ingest_history(partition_cols=...)`` and
+    direct calls partition.
 
     ``new_rows`` is evaluated once, so a live or nondeterministic source
     (a sacct DataSource, a ``now``-dependent transform) is upserted as

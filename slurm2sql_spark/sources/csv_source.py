@@ -24,7 +24,6 @@ __all__ = [
     "read_csv",
     "stitch_lines",
     "read_sacct_lines",
-    "sacct_lines_to_df",
     "sacct_dump_scan",
     "sacct_dump_scan_stitched",
 ]
@@ -77,9 +76,8 @@ def read_sacct_lines(
     ``raw_sacct`` injection seam, slurm2sql.py:881-883). Stitching is
     order-sensitive, so records are reassembled before parallelizing —
     matching the reference, where the stream is a single sacct pipe
-    anyway. For file-shaped input at scale use ``sacct_lines_to_df``
-    (``spark.read.csv`` with the multi-char delimiter — no stitching
-    needed when JobNames are newline-free).
+    anyway. For file-shaped input at scale use ``sacct_dump_scan``
+    (a distributed line scan that counts malformed lines).
 
     ``errors`` collects unrecoverable (too-many-fields) lines so callers
     can surface the count and exit nonzero (reference counts these and
@@ -103,13 +101,6 @@ def read_sacct_lines(
         for f in stitch_lines(it, len(header), errors)
     ]
     return spark.createDataFrame(rows, schema)
-
-
-def sacct_lines_to_df(spark: SparkSession, path: str) -> DataFrame:
-    """File of sacct pipe-delimited lines -> string DataFrame (happy
-    path: no embedded newlines, so Spark's CSV reader handles the
-    multi-char delimiter distributedly with pushdown-friendly scans)."""
-    return spark.read.option("header", True).option("sep", SACCT_DELIMITER).csv(path)
 
 
 def sacct_dump_scan(

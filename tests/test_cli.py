@@ -388,6 +388,25 @@ def test_ingest_cli_sacct_dump_stitch_opt_in(spark, tmp_path):
     assert "2 rows" in msg
 
 
+@pytest.mark.parametrize("stitch", [False, True], ids=["default", "stitch"])
+def test_ingest_cli_sacct_dump_jobs_only(spark, tmp_path, stitch):
+    dump = tmp_path / "dump.txt"
+    dump.write_text(
+        "JobID;|;JobIDRaw;|;User;|;State\n"
+        "1;|;1;|;alice;|;COMPLETED\n"
+        "1.batch;|;1.batch;|;alice;|;COMPLETED\n"
+        "1.0;|;1.0;|;alice;|;COMPLETED\n"
+        "2;|;2;|;bob;|;RUNNING\n"
+    )
+    table = str(tmp_path / "t6")
+    argv = [table, "--sacct-dump", str(dump), "--jobs-only"]
+    msg = ingest_cli(spark, argv + (["--stitch-lines"] if stitch else []))
+    assert "2 rows" in msg
+    rows = spark.read.parquet(table).collect()
+    assert sorted(r.JobID for r in rows) == ["1", "2"]
+    assert all(r.JobStep is None for r in rows)
+
+
 def test_deidentify_cli(spark, csv_path, tmp_path):
     from slurm2sql_spark.cli import deidentify_cli
 

@@ -148,25 +148,6 @@ def test_dump_scan_plan_is_jvm_side_single_scan(spark, tmp_path):
         assert "Exchange" not in plan  # map-only: no shuffle anywhere
 
 
-def test_templated_transform_plan_matches_column_path(spark, catalog):
-    """The SQL-template fast path must not change the OPTIMIZED plan
-    shape vs the direct Column build: same number of exchanges, same
-    Python-free property (row equality is pinned elsewhere; this pins
-    the physical cost)."""
-    from pyspark.sql import functions as F
-
-    from slurm2sql_spark.operators import transform as T
-    from slurm2sql_spark.schema import RAW_FIELDS
-
-    raw = catalog._sacct_raw_from_lineitem(spark, SF_DIR)
-    missing = [f for f in RAW_FIELDS if f not in set(raw.columns)]
-    filled = raw.withColumns({f: F.lit(None).cast("string") for f in missing})
-    fast = _plan(spark, T.slurm_transform(raw, now=1))
-    direct = _plan(spark, T._transform_columns_path(filled, 1, False))
-    for marker in ("Exchange", "Python", "Scan parquet"):
-        assert fast.count(marker) == direct.count(marker), marker
-
-
 def test_q18_aqe_broadcasts_unhinted_aggregate(spark, catalog):
     """VERDICT r7 #5: q18's HAVING-filtered aggregate carries NO forced
     broadcast hint (no size guarantee on an unbounded fact table at

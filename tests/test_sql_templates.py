@@ -1,107 +1,151 @@
-"""Equality guards for the SQL-template construction fast path.
+"""Guards for the transform's once-per-process expressions.
 
-The converters and the transform stages build each expression tree once,
-render it to SQL text, and replay later constructions via F.expr /
-selectExpr (a prepared-statement trick that removes thousands of py4j
-round trips per fresh plan — measured 3.4 s -> 0.4 s of driver time for
-the flagship transform). These tests pin the only risk that introduces:
-the rendered SQL must re-parse to the SAME semantics as the direct
-Column build, for every decorated converter and for the whole transform.
+``slurm_transform`` builds its stage Columns once per process and applies
+them to every call's frame, with no SQL text in between. The risk that
+brings is per-call state held by a shared Column: one call's ``now``, one
+frame's set of missing fields, or a JVM handle that dies with its
+session. These tests pin that every call sees only its own inputs.
+Converter semantics are pinned by test_converters.py, test_jobid.py and
+test_fuzz_converters.py; the whole transform is DuckDB-checked through
+the sacct_eff* oracle-parity entries.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
-from pyspark.sql import functions as F
 
-from slurm2sql_spark.functions import converters as C
-from slurm2sql_spark.functions import jobid as J
+from slurm2sql_spark.operators import transform as T
+from slurm2sql_spark.schema import RAW_FIELDS
 
-#: adversarial battery: empties, sentinels, every duration/unit/jobid
-#: grammar shape, malformed values, negative numbers
-VALUES = [
-    "", None, "Unknown", "None", "UNLIMITED", "Partition_Limit",
-    "1-02:03:04", "1-02:03", "02:03:04", "15:00", "90", "00:15.057",
-    "2.5K", "3G", "100", "2.5k", "10Mn", "4Gc", "0", "x", "-5", "1.5",
-    "2021-01-01T10:00:00", "123", "123_4.batch", "1000_2+3.1",
-    "12[3-9]", "7.extern", "7.0", "0:9", "1:0", "   pad   ",
-]
+#: one value per raw field: a completed single-node job with TRES, memory
+#: and GPU values, so every output column derives from a non-NULL input
+FULL_ROW = {f: "x" for f in RAW_FIELDS} | {
+    "JobID": "5", "JobIDRaw": "5", "State": "COMPLETED",
+    "Timelimit": "02:00:00", "Elapsed": "01:00:00",
+    "Submit": "2021-01-01T09:00:00", "Start": "2021-01-01T10:00:00",
+    "End": "2021-01-01T11:00:00", "ExitCode": "0:0",
+    "Priority": "10", "ReqNodes": "1", "NNodes": "1", "AllocNodes": "1",
+    "NTasks": "1", "NCPUS": "2", "ReqCPUS": "2", "AllocCPUS": "2",
+    "CPUTime": "02:00:00", "TotalCPU": "01:00:00", "UserCPU": "50:00",
+    "SystemCPU": "10:00", "MinCPU": "01:00:00",
+    "ReqTRES": "cpu=2,gres/gpu=1",
+    "AllocTRES": "billing=3,cpu=2,gres/gpu:v100=1,gres/gpu=1,mem=4G",
+    "TRESUsageInTot": "cpu=01:00:00,mem=2G,fs/disk=100,gres/gpuutil=50,gres/gpumem=1G",
+    "TRESUsageOutTot": "fs/disk=200", "TRESUsageInAve": "cpu=01:00:00",
+    "ReqMem": "4G", "AveRSS": "1G", "MaxRSS": "2G", "MaxPages": "3",
+    "MaxVMSize": "3G", "AveDiskRead": "1M", "AveDiskWrite": "1M",
+    "MaxDiskRead": "2M", "MaxDiskWrite": "2M",
+    "ConsumedEnergyRaw": "100", "Comment": "note",
+}
 
-TEMPLATED_FNS = [
-    C.int_, C.nullint, C.nullstr, C.nullstr_strip, C.unixtime,
-    C.str_unknown, C.slurmtime, C.slurmmem, C.float_bytes, C.int_bytes,
-    C.float_metric, C.int_metric,
-    J.job_id_only, J.job_id_nostep, J.job_id_raw_only,
-    J.array_task_id, J.job_step,
-]
+#: optional sacct fields an older or trimmed dump may lack
+OPTIONAL = ("ReqTRES", "AllocTRES", "ReqMem", "ConsumedEnergyRaw", "Comment")
 
-
-@pytest.mark.parametrize("fn", TEMPLATED_FNS, ids=lambda f: f.__name__)
-def test_templated_converter_equals_direct_build(spark, fn):
-    df = spark.createDataFrame([(v,) for v in VALUES], "x string")
-    direct = [r[0] for r in df.select(fn.__wrapped__(F.col("x"))).collect()]
-    first = [r[0] for r in df.select(fn(F.col("x"))).collect()]
-    cached = [r[0] for r in df.select(fn(F.col("x"))).collect()]
-    assert direct == first == cached
-
-
-def test_transform_sql_path_equals_column_path(spark):
-    """Whole-pipeline guard: the cached-selectExpr transform and the
-    direct Column-API fallback must produce identical rows and schema
-    on a synthesized sacct corpus."""
-    from slurm2sql_spark.catalog import _sacct_raw_from_lineitem
-    from slurm2sql_spark.operators import transform as T
-    from slurm2sql_spark.schema import RAW_FIELDS
-
-    raw = _sacct_raw_from_lineitem(spark, "/root/testdata/sf0.001")
-    missing = [f for f in RAW_FIELDS if f not in set(raw.columns)]
-    filled = raw.withColumns({f: F.lit(None).cast("string") for f in missing})
-
-    fast = T.slurm_transform(raw, now=1_700_000_000)
-    direct = T._transform_columns_path(filled, 1_700_000_000, False)
-    assert fast.schema == direct.schema
-    ra = sorted(map(tuple, fast.collect()))
-    rb = sorted(map(tuple, direct.collect()))
-    assert ra == rb and len(ra) > 0
+#: output columns whose inputs are all in OPTIONAL
+FROM_OPTIONAL = {
+    "ReqTRES", "AllocTRES", "ReqMem", "ConsumedEnergy", "Comment",
+    "Billing", "AllocMem", "MemEff", "ReqMemNode", "ReqMemCPU",
+    "NGpus", "ReqGPUS", "GpuType", "GpuEff", "CPUEff",
+}
 
 
-def test_transform_jobs_only_consistent_across_paths(spark):
-    from slurm2sql_spark.catalog import _sacct_raw_from_lineitem
-    from slurm2sql_spark.operators import transform as T
-    from slurm2sql_spark.schema import RAW_FIELDS
+def _frame(spark, fields):
+    from pyspark.sql import types as ST
 
-    raw = _sacct_raw_from_lineitem(spark, "/root/testdata/sf0.001")
-    missing = [f for f in RAW_FIELDS if f not in set(raw.columns)]
-    filled = raw.withColumns({f: F.lit(None).cast("string") for f in missing})
-    fast = T.slurm_transform(raw, now=1_700_000_000, jobs_only=True)
-    direct = T._transform_columns_path(filled, 1_700_000_000, True)
-    assert sorted(map(tuple, fast.collect())) == sorted(
-        map(tuple, direct.collect())
+    schema = ST.StructType([ST.StructField(f, ST.StringType()) for f in fields])
+    return spark.createDataFrame([tuple(FULL_ROW[f] for f in fields)], schema)
+
+
+def test_now_is_per_call(spark):
+    """Two transforms of one frame with different ``now`` each stamp
+    their own ``now`` as ``Time`` on the running row; a ``now`` baked
+    into a shared Column would give both calls the same value."""
+    df = spark.createDataFrame(
+        [
+            ("7", "7", "2021-01-01T10:00:00", "Unknown"),  # running
+            ("8", "8", "2021-01-01T10:00:00", "2021-01-01T11:00:00"),
+        ],
+        "JobID string, JobIDRaw string, Start string, End string",
     )
-    assert fast.filter(F.col("JobStep").isNotNull()).count() == 0
+    a = T.slurm_transform(df, now=1_700_000_000)
+    b = T.slurm_transform(df, now=1_800_000_000)
+    time_b = {r.JobID: r.Time for r in b.collect()}
+    time_a = {r.JobID: r.Time for r in a.collect()}
+    assert time_a["7"] == 1_700_000_000
+    assert time_b["7"] == 1_800_000_000
+    assert time_a["8"] == time_b["8"] is not None
 
 
-def test_plan_cache_bounded(spark):
-    """Schema-per-call callers must not grow the plan cache without
-    bound (the guard clears at 64 entries)."""
-    from slurm2sql_spark.operators import transform as T
+@pytest.mark.parametrize("partial_first", [True, False], ids=["partial", "full"])
+def test_missing_fields_null_only_for_missing(spark, partial_first):
+    """A frame lacking optional fields and a full frame, transformed in
+    either order from a fresh build of the shared stages, differ only in
+    the columns derived from the missing fields, and there the partial
+    frame reads NULL."""
+    full = _frame(spark, RAW_FIELDS)
+    partial = _frame(spark, [f for f in RAW_FIELDS if f not in OPTIONAL])
+    order = (partial, full) if partial_first else (full, partial)
+    T._stages.cache_clear()
+    first, second = (T.slurm_transform(df, now=1).first().asDict() for df in order)
+    got_partial, got_full = (first, second) if partial_first else (second, first)
+    differ = {k for k in got_full if got_full[k] != got_partial[k]}
+    assert differ == FROM_OPTIONAL
+    assert all(got_partial[k] is None for k in differ)
+    assert all(got_full[k] is not None for k in differ)
 
-    df = spark.createDataFrame([("1", "1")], "JobID string, JobIDRaw string")
-    before = dict(T._PLAN_SQL_CACHE)
-    for i in range(3):
-        extra = df.withColumn(f"extra{i}", F.lit("x"))
-        T.slurm_transform(extra, now=1)
-    assert len(T._PLAN_SQL_CACHE) <= 64
-    T._PLAN_SQL_CACHE.clear()
-    T._PLAN_SQL_CACHE.update(before)
+
+_RESTART_PROBE = r"""
+import json
+from pyspark.sql import SparkSession
+from slurm2sql_spark.operators.transform import slurm_transform
+from slurm2sql_spark.session import get_spark
+
+def run():
+    spark = get_spark(shuffle_partitions=1)
+    df = spark.createDataFrame(
+        [("7", "7", "2021-01-01T10:00:00", "Unknown", "1-00:00:00", "2G")],
+        "JobID string, JobIDRaw string, Start string, End string, "
+        "Elapsed string, ReqMem string",
+    )
+    return [r.asDict() for r in slurm_transform(df, now=1_700_000_000).collect()]
+
+first = run()
+SparkSession.getActiveSession().stop()
+print(json.dumps({"first": first, "second": run()}))
+"""
+
+
+def test_transform_after_session_restart():
+    """The shared stage Columns outlive ``spark.stop()``: a new session in
+    the same process transforms to the same rows."""
+    root = os.path.join(os.path.dirname(__file__), "..")
+    env = os.environ | {
+        "SPARK_GRAFT_CPUS": "1",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "SPARK_GRAFT_DRIVER_JAVA_OPTS": "-Xms256m",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_PROBE],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    probe = json.loads(out.stdout.strip().splitlines()[-1])
+    assert probe["first"] == probe["second"]
+    assert probe["first"][0]["Time"] == 1_700_000_000
 
 
 def test_backtick_in_passthrough_column_name(spark):
     """Column names come from the sacct dump header, so a header field
-    containing a backtick must render to valid selectExpr SQL (doubled
-    backtick), not a misparse."""
-    from slurm2sql_spark.operators import transform as T
-
+    containing a backtick must ride through the stages as an ordinary
+    column and be pruned by the final projection."""
     from pyspark.sql import types as ST
 
     schema = ST.StructType(
@@ -112,9 +156,6 @@ def test_backtick_in_passthrough_column_name(spark):
         ]
     )
     df = spark.createDataFrame([("1", "1", "weird")], schema)
-    # the odd column rides through stages 1-3 as a quoted passthrough
-    # (the final projection prunes to the COLUMNS registry); an
-    # unescaped backtick raises ParseException in the first selectExpr
     out = T.slurm_transform(df, now=1_700_000_000)
     assert out.first().JobID == "1"
     assert "we`ird" not in out.columns  # pruned by the final projection
